@@ -66,7 +66,10 @@ def _spread(docs: DataFrame) -> DataFrame:
 
 def _input_bytes(docs: DataFrame) -> int | None:
     """Total bytes of the plan's input files, None when unknowable
-    (non-file plans, remote stores) — the same probe _spread uses."""
+    (non-file plans, remote stores) — the same probe _spread uses. A
+    plan with no input files (in-memory, derived or custom-source
+    frames) or whose files sum to 0 bytes is unknowable too: its size
+    is not in its files."""
     try:
         files = docs.inputFiles()
     except Exception:  # noqa: BLE001
@@ -78,7 +81,7 @@ def _input_bytes(docs: DataFrame) -> int | None:
             total += os.path.getsize(p)
         except OSError:
             return None
-    return total
+    return total or None
 
 
 def _shuffle_width(docs: DataFrame, per_task_bytes: int = 64 << 10) -> int | None:

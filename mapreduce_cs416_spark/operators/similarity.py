@@ -852,6 +852,10 @@ def cosine_near_dup_lsh(
     low-threshold near-dup sweeps the actual scale path is
     cluster-then-verify (``semantic_dedup``), whose per-cell blocks
     cut pair work by ~k× regardless of threshold.
+
+    With ``materialize`` the returned frame carries the bucket-key
+    checkpoint as ``_keyed_ckpt``; free it with
+    ``graph._unpersist_checkpoint`` once the pairs are consumed.
     """
     # _spread: a single-row-group embeddings file otherwise runs the
     # signature pass, the bucket self-join, AND the verify join on one
@@ -878,9 +882,12 @@ def cosine_near_dup_lsh(
         .join(vb, "vec_b")
         .select("vec_a", "vec_b", (dot / (F.col("na") * F.col("nb"))).alias("cos"))
     )
-    return pairs.where(F.col("cos") >= threshold).select(
+    out = pairs.where(F.col("cos") >= threshold).select(
         "vec_a", "vec_b", F.round("cos", 6).alias("score")
     )
+    if materialize:
+        out._keyed_ckpt = cand._keyed_ckpt  # type: ignore[attr-defined] — freeable handle
+    return out
 
 
 def semantic_dedup(

@@ -18,11 +18,15 @@ Scale shape:
   one groupBy(doc_id) to reassemble per-document id arrays in token
   order. The corpus shuffles once, keyed by doc_id — no skew risk
   beyond document length itself.
+- bpe_train: one wordcount shuffle collapses the corpus to its
+  distinct words, then the merge loop runs on the driver over that
+  table, which is bounded by the language's vocabulary, not the
+  corpus.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import bind_once, words_col
@@ -135,15 +139,16 @@ def bpe_merge_counts(docs: DataFrame, top_k: int = 20) -> DataFrame:
 # Each symbol is bracketed as \x01sym\x02 and a word is the
 # concatenation of its bracketed symbols. Under that encoding the BPE
 # merge step — replace every leftmost non-overlapping occurrence of
-# the winning pair — is EXACTLY one engine-built-in string replace()
-# (leftmost, non-overlapping, resumes after the replacement), the same
-# mechanism as Sennrich's reference re.sub. The delimiters cannot
+# the winning pair — is EXACTLY one string replace (leftmost,
+# non-overlapping, resumes after the replacement), the same mechanism
+# as Sennrich's reference re.sub. The delimiters cannot
 # occur inside symbols (words_col tokens are \p{L}-only), so a match
 # always aligns to symbol boundaries, and adjacent matches share no
 # characters, so a==b runs pair up left-to-right exactly like the
 # sequential scan. This is what makes the trainer engine-portable: the
-# DuckDB oracle (plans/northstar.CORPUS_BPE_TRAIN_SQL) unrolls the
-# same rounds over the same encoding with DuckDB's replace().
+# driver loop uses Python's str.replace, and the DuckDB oracle
+# (plans/northstar.CORPUS_BPE_TRAIN_SQL) unrolls the same rounds over
+# the same encoding with DuckDB's replace().
 SYM_OPEN = "\x01"
 SYM_CLOSE = "\x02"
 
@@ -184,27 +189,18 @@ def bpe_word_table(docs: DataFrame) -> DataFrame:
     return wc.select("term", sym.alias("symstr"), "c")
 
 
-def _top_pair(words: DataFrame) -> tuple[str, str, int] | None:
-    """Most frequent adjacent symbol pair, weighted by word count;
-    ties broken (count desc, left, right) so the winner is a pure
-    function of the corpus. ONE vocabulary-sized shuffle + a ONE-row
-    collect (the bounded-driver-state discipline of
-    graph.connected_components' fixpoint probe)."""
-    pr = words.select(_syms().alias("s"), "c").where(F.size("s") >= 2)
-    pairs = pr.select(
-        F.explode(
-            F.expr("transform(sequence(1, size(s) - 1), i -> struct(s[i-1] AS lft, s[i] AS rgt))")
-        ).alias("p"),
-        "c",
-    ).select("p.lft", "p.rgt", "c")
-    top = (
-        pairs.groupBy("lft", "rgt")
-        .agg(F.sum("c").cast("long").alias("n"))
-        .orderBy(F.desc("n"), "lft", "rgt")
-        .limit(1)
-        .collect()
-    )
-    return (top[0]["lft"], top[0]["rgt"], top[0]["n"]) if top else None
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows as a LocalTableScan: createDataFrame over an
+    Arrow table is planned in the JVM, while a list of tuples becomes
+    a parallelized RDD whose every read runs through Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    records = [dict(zip(struct.names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)
 
 
 def bpe_train(
@@ -215,74 +211,46 @@ def bpe_train(
     pairs over the distinct-word table, pick the most frequent,
     rewrite every word by that merge — returning the learned merge
     rules [(rank, lft, rgt, merged, weight)] and the final rewritten
-    word table.
+    word table (term, symstr, c). Stops early once no word has two
+    symbols left.
 
-    Scale shape: after the initial wordcount shuffle the working set
-    is vocabulary-sized forever; each round is ONE pair-count shuffle
-    over it, a 1-row collect, and a map-side string rewrite. Driver
-    state is the k-row merge table. Per-round word tables are LAZY
-    localCheckpoints materialized by the NEXT round's ``_top_pair``
-    collect (r14 — the kcore/connected_components one-job-per-round
-    discipline: the probe reads ``words`` through a single branch, so
-    the multi-branch-over-lazy race cannot occur); the superseded
-    round's blocks are freed right after that materialization. The
-    final round's table is returned lazy — its upstream is the
-    previous MATERIALIZED checkpoint plus one deterministic
-    string-replace projection, so even a multi-branch consumer only
-    risks re-running that projection."""
-    from .graph import _unpersist_checkpoint
-
-    # the initial table stays EAGER: its upstream (the corpus
-    # wordcount) is the expensive scan a lazy race would re-run
-    words = bpe_word_table(docs).localCheckpoint()
-    prev = None
+    Scale shape: the corpus-sized part is ONE wordcount shuffle
+    (bpe_word_table); its rows are collected once and every merge
+    round runs on the driver. Driver state is the distinct-word
+    table, which grows with the language rather than the corpus —
+    the bound every in-memory BPE trainer carries. A round therefore
+    costs no Spark job and no plan analysis. The rounds keep the
+    engine semantics the DuckDB oracle unrolls: pairs split exactly
+    as ``_syms`` does, each weighted by the word count; the winner
+    is the minimum of (-n, lft, rgt) (Python's code-point order is
+    the engines' UTF-8 binary order); the rewrite is one leftmost,
+    non-overlapping str.replace of the bracketed pair, as
+    ``replace()`` does in both engines. The final table is returned
+    as a local DataFrame for the encode paths."""
+    words = [tuple(r) for r in bpe_word_table(docs).collect()]
+    sep = SYM_CLOSE + SYM_OPEN
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
-        top = _top_pair(words)  # materializes words' lazy checkpoint
-        if prev is not None:
-            _unpersist_checkpoint(prev)
-            prev = None
-        if top is None:
+        counts: dict[tuple[str, str], int] = {}
+        for _, symstr, c in words:
+            s = symstr[1:-1].split(sep)
+            for pair in zip(s, s[1:]):
+                counts[pair] = counts.get(pair, 0) + c
+        if not counts:
             break
-        lft, rgt, n = top
+        (lft, rgt), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((rank, lft, rgt, lft + rgt, n))
-        prev = words
-        words = words.withColumn(
-            "symstr",
-            F.replace(
-                "symstr",
-                F.lit(_bracket(lft) + _bracket(rgt)),
-                F.lit(_bracket(lft + rgt)),
-            ),
-        ).localCheckpoint(eager=False)
-    # The final LAZY checkpoint still reads the penultimate round's
-    # MATERIALIZED blocks (prev) until a consumer action materializes
-    # it — so prev cannot be freed here (ADVICE r14: it used to leak
-    # until session end). Carry it on the returned frame; consumers
-    # free both via _free_words once they are done with the table.
-    words._bpe_pinned = prev  # type: ignore[attr-defined]
-    return merges, words
-
-
-def _free_words(words: DataFrame) -> None:
-    """Free a bpe_train word table's checkpoint blocks AND the
-    penultimate round's blocks it carries (see bpe_train's return
-    note). Safe on frames that were never materialized."""
-    from .graph import _unpersist_checkpoint
-
-    _unpersist_checkpoint(words)
-    pinned = getattr(words, "_bpe_pinned", None)
-    if pinned is not None:
-        _unpersist_checkpoint(pinned)
+        old, new = _bracket(lft) + _bracket(rgt), _bracket(lft + rgt)
+        words = [(t, s.replace(old, new), c) for t, s, c in words]
+    return merges, _local_frame(docs.sparkSession, words, "term string, symstr string, c long")
 
 
 def bpe_train_table(docs: DataFrame, n_merges: int = BPE_TRAIN_MERGES) -> DataFrame:
     """The learned merge table as a DataFrame — (rank, lft, rgt,
     merged, weight), the artifact a tokenizer build publishes."""
-    merges, words = bpe_train(docs, n_merges)
-    _free_words(words)
-    return docs.sparkSession.createDataFrame(
-        merges, "rank int, lft string, rgt string, merged string, weight long"
+    merges, _ = bpe_train(docs, n_merges)
+    return _local_frame(
+        docs.sparkSession, merges, "rank int, lft string, rgt string, merged string, weight long"
     )
 
 
@@ -339,9 +307,7 @@ def bpe_encode_docs(
         F.transform(
             F.array_sort(F.collect_list(F.struct("idx", "id"))), lambda s: s["id"]
         ).alias("word_ids")
-    ).localCheckpoint()
-    _free_words(words)
-
+    )
     occ = docs.select("doc_id", F.posexplode(words_col("text")).alias("pos", "term"))
     enc = occ.join(F.broadcast(term_ids), "term")
     out = enc.groupBy("doc_id").agg(

@@ -7,16 +7,46 @@ normalized to strings. Floats are compared exactly — the engine's
 determinism rules (decimal sums, sequential folds, explicit rounding)
 are supposed to make Spark and DuckDB bit-identical; any drift is a
 bug we want to see, not paper over.
+
+``count_jobs`` turns a per-query Spark job budget into one assertion.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import math
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .sources.tables import TABLES
+
+
+class JobCount:
+    """Spark jobs submitted inside a ``count_jobs`` block (``n`` is set
+    when the block exits)."""
+
+    n: int | None = None
+
+
+@contextmanager
+def count_jobs(spark: SparkSession) -> Iterator[JobCount]:
+    """Count the Spark jobs submitted inside the block, from the DAG
+    scheduler's job-id counter, so a job budget is one assertion::
+
+        with count_jobs(spark) as jobs:
+            df.collect()
+        assert jobs.n <= 4
+
+    Jobs from other threads of the same session count too."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    out = JobCount()
+    start = dag.nextJobId()
+    try:
+        yield out
+    finally:
+        out.n = dag.nextJobId() - start
 
 
 def duckdb_connect(sf_dir: str):

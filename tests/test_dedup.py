@@ -497,3 +497,13 @@ def test_simhash_portable_hash_distribution(spark):
     mean = sum(dists) / len(dists)
     assert 24 <= mean <= 40, mean
     assert min(dists) >= 10, min(dists)
+
+
+def test_in_memory_postings_keep_default_width(spark):
+    """A corpus with no backing files has no input bytes to size the
+    postings shuffle from: shingle_postings must leave Spark's width in
+    place, not collapse the checkpoint onto one partition."""
+    docs = _corpus(spark, [(i, f"{_alpha(i)} {_alpha(i + 1)} {_alpha(i + 2)} x") for i in range(40)])
+    assert docs.inputFiles() == []
+    assert dedup.shingle_postings(docs).rdd.getNumPartitions() > 1
+    assert dedup._shuffle_width(docs) is None

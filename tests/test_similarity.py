@@ -494,3 +494,20 @@ def test_margin_mining_lsh_recovers_planted_pairs_from_sparse_candidates(spark, 
     n = p.count()
     n_cand = _banded_candidates(p, n_planes=8, n_tables=4, dim=64).count()
     assert n_cand < 0.10 * n * (n - 1) / 2
+
+
+def test_cosine_near_dup_lsh_keyed_blocks_are_freeable(spark, clustered_emb):
+    """The returned pairs frame carries the bucket-key checkpoint, so a
+    library caller can free its blocks once the pairs are consumed."""
+    from mapreduce_cs416_spark.operators.graph import _unpersist_checkpoint
+
+    pairs = similarity.cosine_near_dup_lsh(clustered_emb, 0.9, n_planes=8, n_tables=4, dim=DIM)
+    assert pairs.collect()
+    keyed_id = pairs._keyed_ckpt._jdf.queryExecution().analyzed().rdd().id()
+
+    def stored() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    assert keyed_id in stored()
+    _unpersist_checkpoint(pairs._keyed_ckpt)
+    assert keyed_id not in stored()

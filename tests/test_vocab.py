@@ -120,22 +120,29 @@ def _ref_bpe(word_counts: dict[str, int], k: int):
     return merges, words
 
 
+def _wc_docs(spark, wc: dict[str, int]):
+    return spark.createDataFrame(
+        [(0, " ".join([w for w, c in wc.items() for _ in range(c)]))],
+        "doc_id long, text string",
+    )
+
+
+def _merge_rows(df) -> list[tuple]:
+    return [
+        (r["rank"], r["lft"], r["rgt"], r["merged"], r["weight"])
+        for r in df.orderBy("rank").collect()
+    ]
+
+
 def test_bpe_train_matches_sequential_reference(spark):
-    """The distributed trainer reproduces the sequential reference
+    """The trainer reproduces the sequential reference
     algorithm merge-for-merge on the classic Sennrich fixture
     (low/lower/newest/widest), including an a==b run-merge round."""
     from mapreduce_cs416_spark.operators.vocab import bpe_train_table
 
     wc = {"low": 5, "lower": 2, "newest": 6, "widest": 3, "zzz": 4}
-    docs = spark.createDataFrame(
-        [(0, " ".join([w for w, c in wc.items() for _ in range(c)]))],
-        "doc_id long, text string",
-    )
     expected, _ = _ref_bpe(wc, 6)
-    got = [
-        (r["rank"], r["lft"], r["rgt"], r["merged"], r["weight"])
-        for r in bpe_train_table(docs, n_merges=6).orderBy("rank").collect()
-    ]
+    got = _merge_rows(bpe_train_table(_wc_docs(spark, wc), n_merges=6))
     assert got == expected
     # the zzz words exercise the a==b case: a run of 3 'z' must pair
     # left-to-right into ('zz','z'), never double-count the middle
@@ -146,10 +153,7 @@ def test_bpe_encode_pieces_match_reference_vocab(spark):
     from mapreduce_cs416_spark.operators.vocab import bpe_encode_pieces
 
     wc = {"hugging": 3, "hugs": 5, "huge": 2, "bug": 4, "bugs": 1}
-    docs = spark.createDataFrame(
-        [(0, " ".join([w for w, c in wc.items() for _ in range(c)]))],
-        "doc_id long, text string",
-    )
+    docs = _wc_docs(spark, wc)
     _, ref_words = _ref_bpe(wc, 5)
     ref_counts: dict[str, int] = {}
     for syms, c in ref_words.items():
@@ -207,3 +211,57 @@ def test_bpe_doc_encode_matches_reference_segmentation(spark):
         assert list(got[doc_id]["ids"]) == want, doc_id
         assert got[doc_id]["n_words"] == len(words)
         assert got[doc_id]["n_pieces"] == len(want)
+
+
+def test_bpe_single_letter_corpus_learns_no_merges(spark):
+    """No word has two symbols: the merge table is empty but keeps its
+    declared schema, and the encode path still answers (every piece is
+    a letter)."""
+    wc = {"a": 3, "b": 1, "é": 2}
+    docs = _wc_docs(spark, wc)
+    expected, _ = _ref_bpe(wc, 4)
+    table = vocab.bpe_train_table(docs, n_merges=4)
+    assert expected == [] and _merge_rows(table) == []
+    assert table.schema.simpleString() == (
+        "struct<rank:int,lft:string,rgt:string,merged:string,weight:bigint>"
+    )
+    got = {r["piece"]: r["n"] for r in vocab.bpe_encode_pieces(docs, n_merges=4).collect()}
+    assert got == wc
+
+
+def test_bpe_stops_early_when_merges_run_out(spark):
+    wc = {"abc": 3, "ab": 2, "cd": 1}
+    expected, _ = _ref_bpe(wc, 50)
+    got = _merge_rows(vocab.bpe_train_table(_wc_docs(spark, wc), n_merges=50))
+    assert got == expected and len(got) < 50
+
+
+def test_bpe_non_ascii_tie_breaks_like_spark_order(spark):
+    """('a','z') and ('a','é') tie on count; the winner must be the one
+    Spark's binary string order ranks first in bpe_merge_counts."""
+    wc = {"az": 2, "aé": 2, "bé": 1, "bz": 1}
+    docs = _wc_docs(spark, wc)
+    expected, _ = _ref_bpe(wc, 3)
+    got = _merge_rows(vocab.bpe_train_table(docs, n_merges=3))
+    assert got == expected
+    top = vocab.bpe_merge_counts(docs).where("rank = 1").collect()[0]
+    assert (got[0][3], got[0][4]) == (top["pair"], top["n"]) == ("az", 2)
+
+
+def test_corpus_bpe_train_job_budget(spark, sf_dir):
+    """Merge rounds run on the driver: the registered query is one
+    distributed wordcount plus the sink, and more rounds cost no jobs."""
+    from mapreduce_cs416_spark.plans.northstar import corpus_bpe_train
+    from mapreduce_cs416_spark.testing import count_jobs
+
+    with count_jobs(spark) as jobs:
+        corpus_bpe_train(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert jobs.n <= 4, f"corpus_bpe_train ran {jobs.n} Spark jobs"
+
+    docs = load_table(spark, sf_dir, "documents")
+    per_k = {}
+    for k in (2, 8):
+        with count_jobs(spark) as jobs:
+            vocab.bpe_train_table(docs, n_merges=k).collect()
+        per_k[k] = jobs.n
+    assert per_k[2] == per_k[8], per_k

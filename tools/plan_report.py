@@ -171,7 +171,7 @@ def summarize(plan: str, sp_rows: list[int] | None = None) -> dict[str, object]:
 
 # --- checkpoint-fragment capture (VERDICT r9 item 8) -----------------
 # localCheckpoint truncates lineage, so the final frame of an iterative
-# query (pagerank's unrolled rounds, bpe_train's merge loop) explains
+# query (pagerank's unrolled rounds, the graph fixpoint loops) explains
 # as a bare scan — PLANS.md read "0 shuffles" for exactly the queries
 # with the MOST shuffles. During the measured run, every localCheckpoint
 # call records its receiver's own EXECUTED plan (eager checkpoints run
