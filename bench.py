@@ -63,7 +63,10 @@ N_TRIM = 2  # keep the middle 3 of 7: scheduling/GC jitter on
 # Measured composition on this container (r9 probe, warm local[32]):
 # ~0.07s noop-sink job round trip (scheduler + py4j), ~0.14s building
 # the DataFrame itself (spark.read.parquet schema/footer IO inside the
-# timed region), remainder the one-partition count. The floor also
+# timed region), remainder the one-partition count. That footer job
+# now runs only on a file's first read: sources/tables memoizes the
+# inferred schema per file version, so the warmup pays it and every
+# timed run plans from the memo with no job. The floor also
 # FALLS ~25% as the JVM JITs (0.29s in a fresh session → 0.22s after
 # heavy queries), so it is position-dependent; measuring it first,
 # with the same discipline, makes it the honest comparator for the

@@ -46,19 +46,10 @@ def _spread(docs: DataFrame) -> DataFrame:
     instead. No-op at scale (many row groups → real splits), where a
     repartition would be a full shuffle of the raw text.
     """
-    spark = docs.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        files = docs.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file plans: nothing to infer
+    total = _input_bytes(docs)
+    if total is None:  # not file-backed, or remote: trust its planning
         return docs
-    total = 0
-    for f in files:
-        p = f.removeprefix("file://").removeprefix("file:")
-        try:
-            total += os.path.getsize(p)
-        except OSError:  # remote/object store: trust its split planning
-            return docs
+    target = docs.sparkSession.sparkContext.defaultParallelism
     if total < (4 << 20) * target:
         return docs.repartition(target)
     return docs
@@ -66,10 +57,10 @@ def _spread(docs: DataFrame) -> DataFrame:
 
 def _input_bytes(docs: DataFrame) -> int | None:
     """Total bytes of the plan's input files, None when unknowable
-    (non-file plans, remote stores) — the same probe _spread uses. A
-    plan with no input files (in-memory, derived or custom-source
-    frames) or whose files sum to 0 bytes is unknowable too: its size
-    is not in its files."""
+    (non-file plans, remote stores) — the one probe behind _spread and
+    _shuffle_width. A plan with no input files (in-memory, derived or
+    custom-source frames) or whose files sum to 0 bytes is unknowable
+    too: its size is not in its files."""
     try:
         files = docs.inputFiles()
     except Exception:  # noqa: BLE001

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, l2_norm
+from ..sources.tables import read_parquet
 
 
 def _prepared(emb: DataFrame) -> DataFrame:
@@ -786,7 +787,7 @@ def ivf_topk_from_layout(
     result-equality with the in-memory ``ivf_topk``).
     """
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim)
-    store = spark.read.parquet(path)
+    store = read_parquet(spark, path)
     qrows = (
         store.where(F.col("vec_id") < n_queries)
         .select("vec_id", "embedding", "nrm")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .tables import read_parquet
+
 FORMATS = ("parquet", "orc", "csv", "json", "text")
 
 
@@ -54,6 +56,8 @@ def read_table(
 ) -> DataFrame:
     if fmt not in FORMATS:
         raise ValueError(f"unknown format {fmt!r}; known: {FORMATS}")
+    if fmt == "parquet" and schema is None:
+        return read_parquet(spark, path)
     r = spark.read
     if schema is not None:
         r = r.schema(schema)
@@ -198,7 +202,7 @@ def compact_table(
     if not sizes:
         raise ValueError(f"no parquet files under {path}")
     n_files = max(1, math.ceil(sum(sizes) / target_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     out = df.repartition(n_files)
     if cluster_by:
         out = out.sortWithinPartitions(*cluster_by)

@@ -594,7 +594,7 @@ def _collect_stats_footers(vdir: str) -> dict:
                     if k is not None:
                         kinds[field.name] = k
             if not kinds:
-                return {}  # no stats-typed columns: the pre-r15 shape
+                break  # no stats-typed columns: {} per bucket, as the scan
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
                 for ci in range(g.num_columns):

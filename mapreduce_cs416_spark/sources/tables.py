@@ -8,15 +8,40 @@ See ``text_corpus`` for the faithful whole-file analog.
 
 At 100 TB each table would be a partitioned parquet dataset (e.g.
 lineitem partitioned by ship month); ``load_table`` reads a directory
-or single file transparently via ``spark.read.parquet``.
+or single file transparently via ``read_parquet``.
+
+Read path. ``spark.read.parquet(path)`` without a schema runs a
+one-task Spark job (``SchemaMergeUtils.mergeSchemasInParallel``) just
+to read a footer, before the query does any work; the reference's map
+task opens its file directly, with no cluster round trip.
+``read_parquet`` / ``parquet_schema`` pay that job once per file
+version: the first read of a local path lets Spark infer the schema
+and memoizes it; every later read of the unchanged path is
+``spark.read.schema(memo).parquet(path)``, which plans the same
+relation with no job. Invariants of the memo:
+
+- key: the absolute path, a fingerprint of its bytes on disk, and the
+  session values of the confs that change inference (``_INFER_CONFS``);
+- fingerprint: ``(st_ino, st_size, st_mtime_ns)`` for a file; for a
+  directory the sorted ``(relpath, st_ino, st_size, st_mtime_ns)`` of
+  every file under it, ``_``-prefixed summary files included (Spark
+  prefers them when it infers), so any rewrite, added or removed part
+  file re-infers;
+- bounded: one entry per path, a new key replaces the old one;
+- fallback: a path ``os.stat`` cannot see (remote schemes, globs,
+  missing paths) takes the plain ``spark.read.parquet``, so Spark's own
+  errors and behavior are unchanged.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # every table the driver materializes (TESTDATA.md)
 TABLES = (
@@ -40,7 +65,86 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return utcify(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return utcify(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
+
+
+# session confs whose values change the schema parquet inference returns
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+# absolute path -> (key, inferred schema). Process-wide: a key holds
+# everything the inferred schema depends on, so a hit is exact for any
+# caller or session; the lock makes each lookup/replace atomic
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """The on-disk version of ``path``; None when ``os.stat`` cannot see it."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    files = []
+    for dirpath, _, names in os.walk(path):
+        for n in names:
+            p = os.path.join(dirpath, n)
+            try:
+                fs = os.stat(p)
+            except OSError:  # removed mid-walk: a writer is busy here
+                return None
+            files.append((os.path.relpath(p, path), fs.st_ino, fs.st_size, fs.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _memo_key(spark: SparkSession, path: str) -> tuple | None:
+    fp = _fingerprint(path)
+    if fp is None:
+        return None
+    return (os.path.abspath(path), fp, tuple(spark.conf.get(c) for c in _INFER_CONFS))
+
+
+def _memo_get(key: tuple | None) -> StructType | None:
+    if key is None:
+        return None
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(key[0])
+    return hit[1] if hit is not None and hit[0] == key else None
+
+
+def _memo_put(key: tuple | None, schema: StructType) -> None:
+    if key is not None:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[key[0]] = (key, schema)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized per file
+    version (module docstring)."""
+    key = _memo_key(spark, path)
+    schema = _memo_get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _memo_put(key, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs the schema-inference job
+    only on the first read of each file version (module docstring)."""
+    key = _memo_key(spark, path)
+    schema = _memo_get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _memo_put(key, df.schema)
+    return df
 
 
 def utcify(df: DataFrame) -> DataFrame:
@@ -71,7 +175,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's µs-truncated naive TIMESTAMP view of the same file, so
     the oracle comparison is exact either way."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return utcify(df)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import decimal_sum
-from ..sources.tables import load_table, utcify
+from ..sources.tables import load_table, parquet_schema, read_parquet, utcify
 
 
 def _stream_dir(src: str, copies: int = 1) -> str:
@@ -65,7 +65,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file sources need an explicit schema: use the raw (pre-conversion)
     # one, where ts arrives as long nanos, and normalize it exactly like
     # sources/tables._load_events does for batch
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     raw = spark.readStream.schema(raw_schema).parquet(src)
     if dict(raw.dtypes).get("ts") == "bigint":
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -82,7 +82,7 @@ def stream_events_replayed(spark: SparkSession, sf_dir: str, copies: int = 2) ->
     batch = load_table(spark, sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = parquet_schema(spark, src)
     raw = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -302,7 +302,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents as an unbounded stream (file source) — the ingestion
     face of the corpus: in production this is the directory new crawl
     shards land in."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     return spark.readStream.schema(schema).parquet(
         _stream_dir(f"{sf_dir}/documents.parquet")
     )
@@ -333,7 +333,7 @@ def stream_documents_replayed(spark: SparkSession, sf_dir: str, copies: int = 2)
     aggregation state observable: a correct streaming sketch must
     ACCUMULATE across batches (counters double under a doubled input),
     unlike dedup state which must absorb replays."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -589,7 +589,7 @@ def streaming_cdc_merge(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
-        current = session.read.parquet(snapshot_path)
+        current = read_parquet(session, snapshot_path)
         merged = cdc.cdc_merge(
             current, batch_df, key_cols, op_col=op_col, seq_col=seq_col
         ).localCheckpoint()
@@ -680,8 +680,8 @@ def streaming_view_maintenance(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
-        snap = session.read.parquet(snapshot_path)
-        view = session.read.parquet(view_path)
+        snap = read_parquet(session, snapshot_path)
+        view = read_parquet(session, view_path)
         delta = ivm.delta_view(
             snap, batch_df, key_cols, group_cols, measures,
             op_col=op_col, seq_col=seq_col,
@@ -866,7 +866,7 @@ def stream_embeddings_replayed(spark: SparkSession, sf_dir: str, copies: int = 2
     """embeddings replayed as ``copies`` identical single-file
     micro-batches (cf. stream_documents_replayed) — the arrival shape
     for the LSH admission gate's replay-absorption check."""
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/embeddings.parquet")
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

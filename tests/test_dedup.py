@@ -507,3 +507,16 @@ def test_in_memory_postings_keep_default_width(spark):
     assert docs.inputFiles() == []
     assert dedup.shingle_postings(docs).rdd.getNumPartitions() > 1
     assert dedup._shuffle_width(docs) is None
+
+
+def test_spread_leaves_in_memory_corpus_unchanged(spark, sf_dir):
+    """_spread sizes from the same _input_bytes probe: a corpus with no
+    backing files comes back as is, with no repartition to
+    defaultParallelism; a small file-backed corpus is still spread."""
+    from mapreduce_cs416_spark.sources.tables import load_table
+
+    docs = _corpus(spark, [(i, f"{_alpha(i)} x") for i in range(10)])
+    assert dedup._spread(docs) is docs
+    on_disk = load_table(spark, sf_dir, "documents")
+    spread = dedup._spread(on_disk)
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

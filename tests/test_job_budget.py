@@ -1,0 +1,37 @@
+"""Per-query Spark job budgets: the counter that hypervisor steal cannot
+move. Each query runs once to warm the session (and the table schema
+memo), then its builder plus the noop sink must stay within the
+committed number of jobs. A change that adds jobs to one of these
+queries fails here; a change that removes some should lower its
+budget."""
+
+from __future__ import annotations
+
+import pytest
+
+from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
+from mapreduce_cs416_spark.testing import count_jobs
+
+# the registered benchmark queries, plus q5 for a six-table read
+BUDGETS = {
+    "graph_triangles_lsh": 18,
+    "corpus_bpe_train": 3,
+    "mr_wordcount_compat": 1,
+    "ivm_orders_revenue": 6,
+    "dedup_exact": 2,
+    "sketch_heavy_hitters": 5,
+    "text_token_stats": 1,
+    "q5_local_supplier": 7,
+}
+
+
+def _run(spark, sf_dir: str, name: str) -> None:
+    ALL_QUERIES[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+@pytest.mark.parametrize("name", sorted(BUDGETS))
+def test_query_job_budget(spark, sf_dir, name):
+    _run(spark, sf_dir, name)
+    with count_jobs(spark) as jobs:
+        _run(spark, sf_dir, name)
+    assert jobs.n <= BUDGETS[name], f"{name}: {jobs.n} jobs, budget {BUDGETS[name]}"

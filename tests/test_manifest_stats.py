@@ -58,6 +58,28 @@ def test_footer_stats_equal_scan_stats(spark, typed_table):
         assert isinstance(ent["d"][0], str)
 
 
+def test_footer_equals_scan_without_stats_columns(spark, tmp_path):
+    """A table with no _STATS_TYPES column (decimal key, array value):
+    the footer walk and the scan both give every bucket an empty entry,
+    and pruning still reads every row."""
+    import os
+
+    path = str(tmp_path / "unstat_tbl")
+    df = spark.range(0, 40).select(
+        F.col("id").cast("decimal(12,2)").alias("k"),
+        F.array(F.col("id"), F.col("id") * 2).alias("v"),
+    )
+    mf.create_table(df, path, ["k"], n_buckets=4)
+    m = mf.read_manifest(path)
+    (rel,) = m["stats"].keys()
+    footer = mf._collect_stats_footers(os.path.join(path, rel))
+    scan = mf._collect_stats_scan(spark, os.path.join(path, rel))
+    assert footer == scan
+    assert footer and all(ent == {} for ent in footer.values())
+    assert m["stats"][rel] == footer
+    assert mf.read_table(spark, path, predicate="k > 30").count() == 9
+
+
 def test_footer_stats_prune_and_reread_row_identical(spark, typed_table):
     """Range predicates over footer stats prune directories without
     changing results (the read contract: prune is IO-only)."""

@@ -16,27 +16,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _isolate, _materialize
 from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
 from mapreduce_cs416_spark.session import get_spark
 
 
-def _materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _isolate(spark) -> None:
-    spark.catalog.clearCache()
-    jvm_sc = spark.sparkContext._jsc.sc()
-    for rdd_id in list(spark.sparkContext._jsc.getPersistentRDDs().keySet()):
-        try:
-            jvm_sc.unpersistRDD(rdd_id, True)
-        except Exception:
-            pass
-    spark.sparkContext._jvm.System.gc()
-
-
 def _jobs(spark):
-    store = spark.sparkContext._jsc.sc().statusStore()
+    jvm_sc = spark.sparkContext._jsc.sc()
+    # the status store learns of a finished job from the listener bus:
+    # drain it, or the sink's job still reads as running
+    jvm_sc.listenerBus().waitUntilEmpty()
+    store = jvm_sc.statusStore()
     empty = spark.sparkContext._jvm.java.util.ArrayList()
     it = store.jobsList(empty).iterator()
     out = []
