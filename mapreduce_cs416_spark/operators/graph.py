@@ -27,7 +27,7 @@ round just to observe "nothing changed".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -537,22 +537,30 @@ def triangle_counts(
     out-degree at O(sqrt(|E|)), so a celebrity node of degree d
     generates O(|E|) wedges total instead of the d^2 a naive
     neighbor join produces — the difference between a skew-immune
-    plan and one task holding the whole star at 100 TB. All three
-    legs are equi-joins on node ids (shuffle or broadcast by size);
-    nothing collects a neighborhood.
+    plan and one task holding the whole star at 100 TB. Nothing
+    collects a neighborhood.
+
+    Degrees come from two windows, not a separate aggregate joined to
+    both endpoints: over the directed list d(n, m) = e ∪ reversed e,
+    ``dn = count(*) OVER (PARTITION BY n)`` then
+    ``dm = count(*) OVER (PARTITION BY m)``, and the rows with
+    (dm, m) < (dn, n) are the oriented edges o(lo=m, hi=n, dhi=dn) —
+    one per undirected edge. The second window leaves o
+    hash-partitioned by lo, so the wedge self-join on lo adds no
+    shuffle and all three uses of o read one exchange. Members are
+    counted from ``explode(array(lo, x, y))`` over the triangles.
     """
     # EAGERLY materialize the canonical edge list (localCheckpoint):
-    # degrees, orientation, both wedge legs, and the closing-edge
-    # probe all read it, and `pairs` is typically an EXPENSIVE
-    # upstream (the O(n²) cosine pair join in graph_triangles). A lazy
-    # persist() is not enough — the seven references sit in ONE action,
-    # whose concurrent tasks race past the unfilled cache and re-run
-    # the pair join several times (benched ~7× the one-pass cost at
-    # sf0.1); the eager checkpoint runs the upstream exactly once. The
-    # edge list itself is small (near-dup pairs, not the corpus).
-    # materialize=False opts out for callers that can't accept eager
-    # execution / pinned blocks / localCheckpoint's missing fault
-    # tolerance (cf. similarity.cosine_near_dup_pairs).
+    # both halves of the directed list read it, and `pairs` is
+    # typically an EXPENSIVE upstream (the O(n²) cosine pair join in
+    # graph_triangles). A lazy persist() is not enough — both reads
+    # sit in ONE action, whose concurrent tasks race past the
+    # unfilled cache and re-run the pair join per read; the eager
+    # checkpoint runs the upstream exactly once. The edge list itself
+    # is small (near-dup pairs, not the corpus). materialize=False
+    # opts out for callers that can't accept eager execution / pinned
+    # blocks / localCheckpoint's missing fault tolerance
+    # (cf. similarity.cosine_near_dup_pairs).
     e = (
         pairs.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -563,22 +571,16 @@ def triangle_counts(
     )
     if materialize:
         e = e.localCheckpoint()
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .union(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
+    d = (
+        e.select(F.col("a").alias("n"), F.col("b").alias("m"))
+        .union(e.select(F.col("b").alias("n"), F.col("a").alias("m")))
+        .withColumn("dn", F.count("*").over(Window.partitionBy("n")))
+        .withColumn("dm", F.count("*").over(Window.partitionBy("m")))
     )
     # orient by (degree, id): lo -> hi
-    ed = (
-        e.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
-    )
-    fwd = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    o = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd, F.struct("db", "b")).otherwise(F.struct(F.col("da").alias("db"), F.col("a").alias("b"))).alias("hi"),
-    ).select("lo", F.col("hi.b").alias("hi"), F.col("hi.db").alias("dhi"))
+    o = d.where(
+        (F.col("dm") < F.col("dn")) | ((F.col("dm") == F.col("dn")) & (F.col("m") < F.col("n")))
+    ).select(F.col("m").alias("lo"), F.col("n").alias("hi"), F.col("dn").alias("dhi"))
     # wedges at the common lower endpoint; (x, y) canonically ordered
     # by (degree, id) so each candidate triangle edge is probed once
     w1 = o.select(F.col("lo"), F.col("hi").alias("x"), F.col("dhi").alias("dx"))
@@ -587,10 +589,6 @@ def triangle_counts(
         (F.col("dx") < F.col("dy")) | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
     )
     closing = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    tri = wedge.join(closing, ["x", "y"]).select("lo", "x", "y")
-    member = (
-        tri.select(F.col("lo").alias("node"))
-        .union(tri.select(F.col("x").alias("node")))
-        .union(tri.select(F.col("y").alias("node")))
-    )
+    tri = wedge.join(closing, ["x", "y"])
+    member = tri.select(F.explode(F.array("lo", "x", "y")).alias("node"))
     return member.groupBy("node").agg(F.count("*").cast("int").alias("n_triangles"))

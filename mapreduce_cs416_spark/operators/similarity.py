@@ -295,15 +295,13 @@ def margin_mine_pairs_lsh(
         .where(F.col("nrm") > 0)
         .withColumn("side", F.expr(side_expr).cast("int"))
     )
-    # the prepared frame feeds the bucketing scan, the two side
-    # orientation joins, and both verify probes — eager
+    # the one bucketed checkpoint feeds the candidate self-join, the
+    # two side orientation joins, and both verify probes — eager
     # materialization or the cast+norm prep re-runs per branch
     # (the cosine_near_dup_lsh lesson, VERDICT r5 item 2)
-    if materialize:
-        p = p.localCheckpoint()
-    cand = None
+    p = _bucketed(p, n_planes, n_tables, dim, materialize=materialize)
     try:
-        cand = _banded_candidates(p, n_planes, n_tables, dim, materialize=materialize)
+        cand = _banded_candidates(p)
         sides = p.select("vec_id", "side")
         oriented = (
             cand.join(
@@ -339,12 +337,9 @@ def margin_mine_pairs_lsh(
         return _margin_pairs_from_scored(scored, k, margin_threshold)
     finally:
         if materialize:
+            # scored is materialized above, so the bucketed frame's
+            # blocks are no longer read by the result plan
             _unpersist_checkpoint(p)
-            keyed = getattr(cand, "_keyed_ckpt", None)
-            if keyed is not None:
-                # scored is materialized above, so the bucket-keyed
-                # frame's blocks are no longer read by the result plan
-                _unpersist_checkpoint(keyed)
 
 
 def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -612,68 +607,73 @@ def ivf_topk(
     )
 
 
-def _banded_candidates(
+def _bucketed(
     p: DataFrame, n_planes: int, n_tables: int, dim: int, materialize: bool = True
 ) -> DataFrame:
-    """Distinct candidate pairs (vec_a < vec_b) sharing a bucket in
-    ANY of ``n_tables`` hyperplane tables — the shared generation step
-    of ``cosine_near_dup_lsh`` and ``lsh_candidate_stats``. ``p`` is a
-    prepared (vec_id, v, nrm) frame.
+    """``p`` (a prepared (vec_id, v, nrm, ...) frame) plus ``bk``: the
+    ``n_tables``-long array of its hyperplane bucket ints, table ``t``
+    banding planes of LCG seed 42+t — the ONE checkpoint of every
+    banded-LSH call (``cosine_near_dup_lsh``, ``lsh_candidate_stats``,
+    ``lsh_eval``, ``margin_mine_pairs_lsh``).
 
-    r14 (guide §7.3): the ``n_tables`` per-table bucket expressions
-    are derived from ONE ``_dots`` array over a single stacked-planes
-    literal instead of ``n_tables × n_planes`` independent HOF trees
-    — per-plane arithmetic and the when/otherwise bit chain are
-    unchanged, so buckets (and the DuckDB oracle replay) are
-    bit-identical; what changes is plan size, which was costing a
-    measured ~3 s of driver analysis per LSH query at sf0.1.
+    r14 (guide §7.3): every table's bucket is derived from ONE
+    ``_dots`` array over a single stacked-planes literal instead of
+    ``n_tables × n_planes`` independent HOF trees — per-plane
+    arithmetic and the when/otherwise bit chain are unchanged, so
+    buckets (and the DuckDB oracle replay) are bit-identical.
 
-    r15 (guide §7.3 again): the (vec_id, tbl, bucket) frame is
-    eagerly CHECKPOINTED, so the n_planes·n_tables·dim-double plane
-    literal is parsed and analyzed exactly ONCE (inside the
-    checkpoint job's plan) instead of riding both self-join sides of
-    the candidate plan through every Catalyst pass — measured 3.17 →
-    2.47 s trimmed-mean on the cosine_near_dup_lsh shape at sf0.1
-    (interleaved A/B; the alternative of shipping the planes as a
-    broadcast one-row frame measured WORSE, 3.50 s: a non-foldable
-    plane column costs more at execution than it saves in analysis).
-    Bucket values are unchanged — the checkpoint only truncates
-    lineage. The checkpointed blocks are bucket keys (KB-scale per
-    million vectors, never the vectors), freed by the caller's usual
-    lifecycle (bench _isolate / _unpersist_checkpoint on the frame
-    left in ``cand._keyed_ckpt``). ``materialize=False`` keeps the
-    old lazy shape for callers that cannot accept eager execution."""
+    The frame is eagerly CHECKPOINTED so that the
+    n_planes·n_tables·dim-double plane literal is parsed and analyzed
+    exactly once, inside the checkpoint job's plan, instead of riding
+    both self-join sides through every Catalyst pass (r15 measured
+    3.17 → 2.47 s on the cosine_near_dup_lsh shape at sf0.1; shipping
+    the planes as a broadcast one-row frame measured worse, 3.50 s).
+    The same checkpoint also serves the vectors to the verify step,
+    and a lazy persist would race (cf. graph.triangle_counts). The
+    caller frees it with ``graph._unpersist_checkpoint``.
+    ``materialize=False`` keeps the lazy shape for callers that
+    cannot accept eager execution."""
     stacked = [
         plane
         for t in range(n_tables)
         for plane in _hyperplanes(n_planes, dim, seed=42 + t)
     ]
-    tables_sql = ", ".join(
-        f"struct({t} AS tbl, {_bits_sql('_dots', n_planes, base=t * n_planes)} AS bucket)"
-        for t in range(n_tables)
+    bk = ", ".join(_bits_sql("_dots", n_planes, base=t * n_planes) for t in range(n_tables))
+    pb = (
+        p.withColumn("_dots", F.expr(_dots_sql(stacked)))
+        .withColumn("bk", F.expr(f"array({bk})"))
+        .drop("_dots")
     )
-    keyed = (
-        p.select("vec_id", F.expr(_dots_sql(stacked)).alias("_dots"))
-        .select("vec_id", F.explode(F.expr(f"array({tables_sql})")).alias("tb"))
-        .select("vec_id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
+    return pb.localCheckpoint() if materialize else pb
+
+
+def _bucket_join(pb: DataFrame, *carry: str) -> DataFrame:
+    """Self-join of a ``_bucketed`` frame on (tbl, bucket) with
+    a.vec_id < b.vec_id: one row per shared table, sides aliased ``a``
+    and ``b``, each carrying vec_id and the ``carry`` columns. An
+    equi-join on the bucket keys, never all-pairs."""
+    k = pb.select("vec_id", *carry, F.posexplode("bk").alias("tbl", "bucket"))
+    a = k.alias("a")
+    b = k.alias("b")
+    return a.join(
+        b,
+        (F.col("a.tbl") == F.col("b.tbl"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.vec_id") < F.col("b.vec_id")),
     )
-    if materialize:
-        keyed = keyed.localCheckpoint()
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+
+
+def _banded_candidates(pb: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (vec_a < vec_b) of a ``_bucketed``
+    frame: pairs sharing a bucket in ANY of its tables — the
+    candidate set ``lsh_candidate_stats``, ``lsh_eval`` and
+    ``margin_mine_pairs_lsh`` measure or score. Reads ``bk`` from the
+    caller's one checkpoint; makes none of its own."""
+    return (
+        _bucket_join(pb)
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    if materialize:
-        cand._keyed_ckpt = keyed  # type: ignore[attr-defined] — freeable handle
-    return cand
 
 
 def lsh_candidate_stats(
@@ -688,24 +688,19 @@ def lsh_candidate_stats(
     measures 0.409 on the sf0.001 i.i.d. fixture, see
     plans/northstar._COSINE_NEAR_DUP_THRESHOLD).
 
-    The prepared frame is eagerly materialized (both self-join sides
-    of the candidate count read it — a lazy persist races, cf.
-    cosine_near_dup_lsh) and its blocks are freed before returning
-    even if a count throws."""
+    The bucketed frame is the one ``_bucketed`` checkpoint (both
+    self-join sides of the candidate count read it — a lazy persist
+    races, cf. cosine_near_dup_lsh) and its blocks are freed before
+    returning even if a count throws."""
     from .dedup import _spread
     from .graph import _unpersist_checkpoint
 
-    p = _spread(_prepared(emb)).where(F.col("nrm") > 0).localCheckpoint()
-    cand = None
+    p = _bucketed(_spread(_prepared(emb)).where(F.col("nrm") > 0), n_planes, n_tables, dim)
     try:
-        cand = _banded_candidates(p, n_planes, n_tables, dim)
-        n_cand = cand.count()
+        n_cand = _banded_candidates(p).count()
         n_vec = p.count()
     finally:
         _unpersist_checkpoint(p)
-        keyed = getattr(cand, "_keyed_ckpt", None)
-        if keyed is not None:
-            _unpersist_checkpoint(keyed)
     spark = emb.sparkSession
     total = n_vec * (n_vec - 1) // 2
     return spark.createDataFrame(
@@ -854,40 +849,51 @@ def cosine_near_dup_lsh(
     cluster-then-verify (``semantic_dedup``), whose per-cell blocks
     cut pair work by ~k× regardless of threshold.
 
-    With ``materialize`` the returned frame carries the bucket-key
+    One checkpoint, the cosine checked inside the bucket join (the
+    theta-join rule of Okcan & Riedewald, SIGMOD 2011: evaluate the
+    predicate in the reducer that already holds both records). The
+    ``_bucketed`` frame (vec_id, v, nrm, bk) is checkpointed once;
+    its ``bk`` array is posexploded to (tbl, bucket) and self-joined
+    with BOTH sides carrying v and nrm, the exact cosine is computed
+    and thresholded right there, and ``distinct`` collapses a pair
+    found in several tables. The cosine is a deterministic function
+    of the pair (the same sequential fold every time), so each copy
+    carries the bit-identical score and the result equals
+    distinct-candidates-then-verify. The shuffle carries
+    O(n_tables · N · dim) vector values instead of O(candidates)
+    vector-carrying pairs through two verify joins — and candidates
+    are ~41% of all pairs at the registered 4×8 point.
+
+    With ``materialize`` the returned frame carries that one
     checkpoint as ``_keyed_ckpt``; free it with
     ``graph._unpersist_checkpoint`` once the pairs are consumed.
     """
     # _spread: a single-row-group embeddings file otherwise runs the
-    # signature pass, the bucket self-join, AND the verify join on one
-    # task (see cosine_near_dup_pairs) — bench showed a 17s outlier.
-    # localCheckpoint: the prepared frame feeds the bucketing scan AND
-    # both verify-join probes; without eager materialization the
-    # cast+norm prep runs three times (VERDICT r5 item 2; lazy persist
-    # still races — benched 3.0s -> 2.2s at sf0.1). Zero-norm guard:
-    # cf. cosine_near_dup_pairs — output parity with the exact twin
-    # requires the same NaN-proofing. materialize=False escape hatch:
-    # see cosine_near_dup_pairs (eager execution, pinned blocks,
-    # no fault tolerance; reliable checkpoint is the durable form).
+    # signature pass and the bucket self-join on one task (see
+    # cosine_near_dup_pairs) — bench showed a 17s outlier. Zero-norm
+    # guard: cf. cosine_near_dup_pairs — output parity with the exact
+    # twin requires the same NaN-proofing. materialize=False escape
+    # hatch: see cosine_near_dup_pairs (eager execution, pinned
+    # blocks, no fault tolerance; reliable checkpoint is the durable
+    # form).
     from .dedup import _spread
 
     p = _spread(_prepared(emb)).where(F.col("nrm") > 0)
-    if materialize:
-        p = p.localCheckpoint()
-    cand = _banded_candidates(p, n_planes, n_tables, dim, materialize=materialize)
-    va = p.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    vb = p.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dot = F.expr("aggregate(zip_with(va, vb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-    pairs = (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", (dot / (F.col("na") * F.col("nb"))).alias("cos"))
+    pb = _bucketed(p, n_planes, n_tables, dim, materialize=materialize)
+    dot = F.expr("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
+    out = (
+        _bucket_join(pb, "v", "nrm")
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            (dot / (F.col("a.nrm") * F.col("b.nrm"))).alias("cos"),
+        )
+        .where(F.col("cos") >= threshold)
+        .select("vec_a", "vec_b", F.round("cos", 6).alias("score"))
+        .distinct()
     )
-    out = pairs.where(F.col("cos") >= threshold).select(
-        "vec_a", "vec_b", F.round("cos", 6).alias("score")
-    )
     if materialize:
-        out._keyed_ckpt = cand._keyed_ckpt  # type: ignore[attr-defined] — freeable handle
+        out._keyed_ckpt = pb  # type: ignore[attr-defined] — freeable handle
     return out
 
 
@@ -1112,10 +1118,11 @@ def lsh_eval(
     spark = emb.sparkSession
     out = None
     for label, threshold, n_planes, n_tables in points:
-        p = _spread(_prepared(emb)).where(F.col("nrm") > 0).localCheckpoint()
-        cand = None
+        p = _bucketed(
+            _spread(_prepared(emb)).where(F.col("nrm") > 0), n_planes, n_tables, dim
+        )
         try:
-            cand = _banded_candidates(p, n_planes, n_tables, dim)
+            cand = _banded_candidates(p)
             va = p.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
             vb = p.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
             dot = F.expr("aggregate(zip_with(va, vb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
@@ -1157,8 +1164,5 @@ def lsh_eval(
             )
         finally:
             _unpersist_checkpoint(p)
-            keyed = getattr(cand, "_keyed_ckpt", None)
-            if keyed is not None:
-                _unpersist_checkpoint(keyed)
         out = row if out is None else out.unionByName(row)
     return out

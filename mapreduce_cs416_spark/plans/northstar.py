@@ -410,8 +410,14 @@ def _lsh_near_dup_sql(
     decimal literals to the same IEEE doubles, and the bucket is
     integer arithmetic on the resulting sign bits — so the candidate
     set, the verify cosines, and the rounded scores all match the
-    Spark plan exactly (cf. ``similarity._bucket_expr`` /
-    ``_banded_candidates``)."""
+    Spark plan exactly (cf. ``similarity._bucketed``).
+
+    The twin keeps the plain distinct-candidates-then-verify shape
+    (``cand`` joined back to ``n`` twice) while the Spark operator
+    scores each pair inside the bucket join and takes ``distinct``
+    last: the cosine is a deterministic function of the pair, so both
+    shapes yield the same pair set with bit-identical scores, and the
+    twin checks the operator's rewrite instead of repeating it."""
     from ..operators.similarity import _hyperplanes
 
     tables = [_hyperplanes(n_planes, dim, seed=42 + t) for t in range(n_tables)]
@@ -3076,9 +3082,13 @@ def graph_triangles_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _triangles_tail_sql() -> str:
     """The edge-source-independent tail of the triangle-count oracle:
     degree orientation, wedge enumeration, closing-edge probe, and
-    the member count — mirrors graph.triangle_counts exactly (UNION
-    ALL everywhere, same (degree, id) tie-breaks). Prepend any WITH
-    chain that ends in an ``e0(a, b)`` CTE of undirected a < b edges."""
+    the member count — the same (degree, id) orientation, wedge
+    predicate and closing-edge join as graph.triangle_counts, which
+    gets its degrees from two windows over the directed edge list
+    and counts members through one explode; here a grouped degree
+    table joined to both endpoints and a UNION ALL give the same
+    rows. Prepend any WITH chain that ends in an ``e0(a, b)`` CTE of
+    undirected a < b edges."""
     return """
 deg AS (SELECT node, count(*) AS d
         FROM (SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0)

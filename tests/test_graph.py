@@ -219,6 +219,70 @@ def test_triangle_counts_orientation_invariant(spark):
     assert a == b == [(0, 1), (1, 1), (2, 1)]
 
 
+def _brute_triangles(edges) -> dict[int, int]:
+    """Per-node triangle counts by checking every node triple of the
+    undirected simple graph the edge list denotes."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    nodes = sorted(adj)
+    out: dict[int, int] = {}
+    for i, a in enumerate(nodes):
+        for j, b in enumerate(nodes[i + 1 :], i + 1):
+            if b not in adj[a]:
+                continue
+            for c in nodes[j + 1 :]:
+                if c in adj[a] and c in adj[b]:
+                    for x in (a, b, c):
+                        out[x] = out.get(x, 0) + 1
+    return out
+
+
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    """A seeded random graph with every shape the orientation must
+    survive: a hub of degree 22 attached to two 6-cliques and ten
+    leaves (many degree ties inside the cliques), a sparse random part
+    whose edges sometimes hit the cliques, plus duplicated, reversed
+    and self-loop edges."""
+    import random
+
+    rng = random.Random(seed)
+    edges = []
+    for base in (100, 200):
+        members = range(base, base + 6)
+        edges += [(a, b) for a in members for b in members if a < b]
+        edges += [(0, m) for m in members]
+    edges += [(0, 300 + i) for i in range(10)]
+    edges += [(rng.randrange(1, 40), rng.randrange(1, 40)) for _ in range(70)]
+    edges += [(rng.randrange(1, 40), rng.choice([100, 105, 200, 203])) for _ in range(6)]
+    extra = rng.sample(edges, 20)
+    edges += [(b, a) for a, b in extra[:10]] + extra[10:]
+    edges += [(n, n) for n in (0, 7, 100)]
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("materialize", [True, False])
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_triangle_counts_match_brute_force(spark, seed, materialize):
+    """triangle_counts equals a pure-Python triple scan on seeded
+    random graphs with ties, a degree-22 hub, duplicate/reversed
+    edges and self-loops, with and without the edge checkpoint."""
+    from mapreduce_cs416_spark.operators.graph import triangle_counts
+
+    edges = _random_graph(seed)
+    hub_deg = len({b if a == 0 else a for a, b in edges if 0 in (a, b) and a != b})
+    assert hub_deg >= 20
+    pairs = spark.createDataFrame(edges, "vec_a long, vec_b long")
+    got = {
+        r["node"]: r["n_triangles"]
+        for r in triangle_counts(pairs, materialize=materialize).collect()
+    }
+    assert got == _brute_triangles(edges)
+
+
 def test_kcore_peels_chains_keeps_triangle(spark):
     """Triangle {1,2,3} with a pendant chain 3-4-5: the 2-core must
     peel 5 (degree 1), then 4 (degree 1 after the first round) — two

@@ -12,9 +12,15 @@ import pytest
 from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
 from mapreduce_cs416_spark.testing import count_jobs
 
-# the registered benchmark queries, plus q5 for a six-table read
+# the registered benchmark queries, q5 for a six-table read, and the
+# other LSH and triangle queries sharing the banded-LSH and
+# triangle-count operators
 BUDGETS = {
-    "graph_triangles_lsh": 18,
+    "graph_triangles_lsh": 11,
+    "graph_triangles": 11,
+    "graph_kcore_lsh": 35,
+    "similarity_cosine_near_dup_lsh": 5,
+    "similarity_near_dup_lsh_prod": 5,
     "corpus_bpe_train": 3,
     "mr_wordcount_compat": 1,
     "ivm_orders_revenue": 6,

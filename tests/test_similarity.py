@@ -486,28 +486,51 @@ def test_margin_mining_lsh_recovers_planted_pairs_from_sparse_candidates(spark, 
     # pairs on this fixture — allow slack for the planted stratum)
     from mapreduce_cs416_spark.operators.similarity import (
         _banded_candidates,
+        _bucketed,
         _prepared,
     )
     from pyspark.sql import functions as F
 
     p = _prepared(planted).where(F.col("nrm") > 0)
     n = p.count()
-    n_cand = _banded_candidates(p, n_planes=8, n_tables=4, dim=64).count()
+    pb = _bucketed(p, n_planes=8, n_tables=4, dim=64, materialize=False)
+    n_cand = _banded_candidates(pb).count()
     assert n_cand < 0.10 * n * (n - 1) / 2
 
 
 def test_cosine_near_dup_lsh_keyed_blocks_are_freeable(spark, clustered_emb):
-    """The returned pairs frame carries the bucket-key checkpoint, so a
-    library caller can free its blocks once the pairs are consumed."""
+    """The returned pairs frame carries the call's one checkpoint, so a
+    library caller can free its blocks once the pairs are consumed:
+    after freeing that handle no RDD the call stored stays pinned."""
     from mapreduce_cs416_spark.operators.graph import _unpersist_checkpoint
-
-    pairs = similarity.cosine_near_dup_lsh(clustered_emb, 0.9, n_planes=8, n_tables=4, dim=DIM)
-    assert pairs.collect()
-    keyed_id = pairs._keyed_ckpt._jdf.queryExecution().analyzed().rdd().id()
 
     def stored() -> set[int]:
         return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
+    before = stored()
+    pairs = similarity.cosine_near_dup_lsh(clustered_emb, 0.9, n_planes=8, n_tables=4, dim=DIM)
+    assert pairs.collect()
+    keyed_id = pairs._keyed_ckpt._jdf.queryExecution().analyzed().rdd().id()
+
     assert keyed_id in stored()
     _unpersist_checkpoint(pairs._keyed_ckpt)
-    assert keyed_id not in stored()
+    assert stored() - before == set()
+
+
+@pytest.mark.parametrize("materialize", [True, False])
+def test_cosine_near_dup_lsh_pair_in_many_buckets_emitted_once(spark, materialize):
+    """The cosine is scored once per shared (table, bucket): identical
+    vectors collide in every table, yet each pair comes out exactly
+    once, with the exact twin's score."""
+    twin = _unit(_lcg_vec(11))
+    rows = [(0, twin), (1, twin), (2, twin), (3, _unit(_lcg_vec(12)))]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    lsh = [
+        tuple(r)
+        for r in similarity.cosine_near_dup_lsh(
+            emb, 0.9, n_planes=8, n_tables=4, dim=DIM, materialize=materialize
+        ).collect()
+    ]
+    exact = [tuple(r) for r in similarity.cosine_near_dup_pairs(emb, 0.9).collect()]
+    assert sorted(lsh) == sorted(exact)
+    assert sorted((a, b) for a, b, _ in lsh) == [(0, 1), (0, 2), (1, 2)]
