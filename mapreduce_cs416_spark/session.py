@@ -11,6 +11,15 @@ environment:
   a real cluster AQE coalesces upward/downward from this hint.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled so the few Pandas-UDF paths batch-transfer.
+- The serial collector in the driver JVM, which in local mode is also
+  the executor. G1 sizes its young generation from pause-time
+  predictions, so the heap it commits (and the process's peak RSS)
+  swings with the timing of concurrent tasks; the serial collector
+  resizes only from the free ratio after each collection, so the
+  footprint follows the live set. Measured on 4 vCPU with a 4g heap
+  (perfbench, sf0.01): peak RSS median 1342 -> 1134 MB with the
+  interquartile range 110 -> 48 MB on ingest_sf0.01, and 1744 -> 1297
+  MB with 121 -> 48 MB on iterative_sf0.01.
 """
 
 from __future__ import annotations
@@ -50,7 +59,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # managed tables (bucketed joins) live outside the repo tree
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
-        .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/spark_graft_derby")
+        .config(
+            "spark.driver.extraJavaOptions",
+            "-Dderby.system.home=/tmp/spark_graft_derby -XX:+UseSerialGC",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,8 +20,10 @@ public designs) fix this with the same ideas reproduced here:
    one link succeeds, the loser gets a typed :class:`CommitConflict`
    and retries its whole merge from the new latest version (VERDICT
    r9 item 1 — ``os.rename`` silently replaced a racing committer's
-   manifest, a lost update). Each writer also stages its data under a
-   writer-unique ``data/v{N}-{token}`` directory, so a losing
+   manifest, a lost update). A version at or below the current head
+   is refused before the link, so a writer whose slot was committed
+   and then vacuumed cannot re-create it. Each writer also stages its
+   data under a writer-unique ``data/v{N}-{token}`` directory, so a losing
    writer's files never clobber the winner's — they become orphans
    that ``vacuum`` reclaims.
 
@@ -442,11 +444,25 @@ def _commit(path: str, manifest: dict) -> None:
     version N proves N-1 was the latest at publish time, so the base
     is exact by construction even under commit races. After the link,
     the ``_latest`` pointer is refreshed (advisory, forward-probed by
-    readers)."""
+    readers).
+
+    The link alone cannot see a slot that was committed and then
+    vacuumed: a writer whose base fell behind ``vacuum``'s retention
+    window would re-create that version, point ``_latest`` at it, and
+    readers would stop at the gap above it — every newer commit
+    silently lost. So a version at or below the current head is a
+    conflict before anything is staged. (A slot is vacuumed only after
+    newer versions exist, so the head never drops below it again.)"""
     import time
 
-    manifest["committed_at"] = time.time()  # history / as-of metadata
     version = manifest["version"]
+    if current_version(path) >= version:
+        raise CommitConflict(
+            f"version {version} is at or below the head under {path} "
+            "(committed, maybe already vacuumed); retry from the latest "
+            "manifest"
+        )
+    manifest["committed_at"] = time.time()  # history / as-of metadata
     base = None
     if version > 1:
         try:

@@ -508,6 +508,26 @@ def test_vacuum_retention_keeps_time_travel_window(spark, seeded):
         mf.vacuum(path, keep_versions=0)
 
 
+def test_stale_writer_cannot_republish_a_vacuumed_version(spark, seeded):
+    """A writer whose base fell behind vacuum's retention window must
+    lose the commit: its version slot was committed and then vacuumed,
+    so a bare put-if-absent link would succeed, point ``_latest`` back
+    at the stale snapshot and drop every newer commit (the lost sink
+    batches of the contention storm)."""
+    path, _, _ = seeded
+    stale = mf.read_manifest(path)
+    for _ in range(4):
+        latest = mf.read_manifest(path)
+        mf._commit(path, {**latest, "version": latest["version"] + 1, "op": "noop"})
+    mf.vacuum(path, keep_versions=2)  # keeps v4 and v5
+    with pytest.raises(FileNotFoundError):
+        mf.read_manifest(path, version=2)
+    with pytest.raises(mf.CommitConflict):
+        mf._commit(path, {**stale, "version": stale["version"] + 1})
+    assert mf.current_version(path) == 5
+    assert mf.read_manifest(path)["op"] == "noop"
+
+
 def test_partition_expr_must_reference_only_key_cols(spark, sf_dir, tmp_path):
     """ADVICE r9 (medium): a partition expression over a mutable
     non-key column would misroute updates and resurrect stale rows —
