@@ -144,12 +144,10 @@ def shingle_postings(
     otherwise race a lazy cache and re-run the tokenize+shingle scan
     per branch (the SKILL.md gotcha); pass False only when exactly one
     downstream branch reads the result. Lifecycle note: the
-    checkpointed blocks stay pinned until the session frees them —
-    the returned frame's plan reads them lazily, so the operator
-    cannot unpersist on your behalf; a long-lived service should free
-    consumed queries' blocks the way bench._isolate does
-    (unpersistRDD over getPersistentRDDs), and graph._unpersist_checkpoint
-    shows the per-frame API."""
+    checkpointed blocks stay pinned until freed — the returned frame's
+    plan reads them lazily, so the operator cannot unpersist on your
+    behalf; a long-lived service frees them with ``checkpoints.free``
+    on the postings (or on any frame built from them) once consumed."""
     ex = (
         shingle_sets(docs, k)
         .select(
@@ -321,7 +319,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.2,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates, verified with exact Jaccard.
 
@@ -341,16 +338,12 @@ def minhash_lsh_pairs(
     sf0.1). The checkpointed blocks are |docs| shingle arrays ≈ the
     corpus itself; the bench/driver frees blocks between queries, and
     at 100 TB the storage level spills to disk rather than evicting
-    the working set. ``materialize=False`` skips the checkpoint for
-    callers that cannot accept eager execution, pinned blocks, or
-    localCheckpoint's lack of fault tolerance (an executor loss
-    kills the truncated lineage); the durable production forms are
-    reliable ``checkpoint()`` or AQE exchange reuse.
+    the working set. localCheckpoint is not fault-tolerant (an
+    executor loss kills the truncated lineage); the durable production
+    forms are reliable ``checkpoint()`` or AQE exchange reuse.
     """
     rows = n_hashes // bands
-    sh = shingle_sets(docs, k)
-    if materialize:
-        sh = sh.localCheckpoint()
+    sh = shingle_sets(docs, k).localCheckpoint()
     sigs = minhash_signatures(docs, k, n_hashes, shingles=sh)
     # one tree for all bands — see minhash_signatures' r14 note; the
     # band index feeding hash() is the same int value as the old

@@ -1,4 +1,5 @@
-"""Distributed connected components — dedup-cluster canonicalization.
+"""Iterative graph operators over near-dup pair lists: connected
+components, k-core, PageRank, and triangle counts.
 
 Near-dup detection (dedup.py) emits PAIRS; an actual dedup pipeline
 must then group transitively-connected pairs and keep one canonical
@@ -8,44 +9,50 @@ algorithm the reference cannot express at all (its dataflow is a
 single map→shuffle→reduce pass, mr/coordinator.go) and SQL can only
 express via recursive CTEs that don't scale out.
 
-Implemented as alternating *large-star / small-star* rounds (Kiveris,
-Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
-MapReduce and Beyond", ACM SoCC 2014): each round is one
+Components are found by alternating *large-star / small-star* rounds
+(Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
+Components in MapReduce and Beyond", ACM SoCC 2014): each round is one
 aggregate + one join over the edge list keyed by node id, so a round
 costs O(|E|) shuffle with no per-node neighbor materialization
 (no collect_list — a celebrity node's neighborhood never has to fit
 in one task), and the number of rounds is O(log n) even on
 pathological path graphs, vs O(diameter) for naive label propagation.
-Lineage is truncated with ``localCheckpoint`` every round so the plan
-doesn't grow with the iteration count.
-
 The fixpoint (a disjoint union of min-rooted stars) is detected
-structurally from two constant-size driver-side probes — never by
+structurally from one constant-size driver-side probe — never by
 collecting the edge set, and without spending an extra full star
 round just to observe "nothing changed".
+
+Components and k-core run to their fixpoint through one driver,
+``_fixpoint``, which owns the checkpoint discipline of both loops:
+each round's state is a LAZY ``localCheckpoint`` (lineage stays
+round-sized), the round's one-row probe is the action that
+materializes it (one job per round, not a checkpoint job plus a
+probe job), and only after that probe is the superseded state freed
+(the new state's plan reads it until then). The probe must read the
+state through a single branch: several branches over a lazy
+intermediate in one action race past its unfilled blocks and re-run
+the upstream per branch. PageRank runs a fixed number of rounds and
+checkpoints every second one. Every checkpoint is released with
+``checkpoints.free``.
 """
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .checkpoints import free
 
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Free a superseded ``localCheckpoint``'s storage blocks NOW.
-
-    ``DataFrame.unpersist()`` only consults the cache manager and is a
-    no-op for checkpointed plans; the blocks belong to the RDD inside
-    the plan's LogicalRDD node, which is only reachable through the
-    JVM plan (verified: RDDStorageInfo drops to zero on this call,
-    stays pinned after ``df.unpersist()``). Best-effort: on any
-    introspection failure the blocks are simply left for GC, which
-    was the previous behavior.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+# PageRank truncates lineage every second round: within a pair the
+# second round's two references to the first round's ranks (the
+# dangling aggregate and the broadcast build side) share the first
+# round's shuffle via ReusedExchange, so the pair pays one Catalyst
+# planning pass and one checkpoint job instead of two (measured
+# 8.5 → 7.2 s adjacent at sf0.1; intervals of 4+ regress — plan
+# growth outruns the amortization).
+_PAGERANK_CHECKPOINT_EVERY = 2
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -106,10 +113,7 @@ def _is_star_fixpoint(edges: DataFrame) -> bool:
 
     SINGLE-branch over ``edges`` (r14): both endpoints are emitted by
     one explode instead of a two-branch union, so the probe reads the
-    edge frame exactly once — which is what lets
-    ``connected_components`` hand it a LAZY checkpoint to materialize
-    (the kcore one-job-per-round discipline) without the multi-branch
-    race the verify-skill gotcha warns about."""
+    edge frame exactly once, as ``_fixpoint`` requires of a probe."""
     row = (
         edges.select(
             F.explode(
@@ -143,6 +147,45 @@ def _is_star_fixpoint(edges: DataFrame) -> bool:
     return row["n_edges"] == row["n_children"] and row["n_chained"] == 0
 
 
+def _fixpoint(
+    plan: DataFrame,
+    probe: Callable[[DataFrame], Any],
+    step: Callable[[DataFrame, Any], DataFrame | None],
+    max_rounds: int,
+    name: str,
+    start: DataFrame | None = None,
+    held: tuple[DataFrame, ...] = (),
+) -> DataFrame:
+    """Run ``plan`` to its fixpoint under the discipline in the module
+    docstring. Each round checkpoints ``plan`` lazily as the state,
+    runs ``probe(state)`` (the round's one job; single-branch), frees
+    the previous state, and asks ``step(state, probe_result)`` for the
+    next plan — None at the fixpoint, where the state is returned.
+
+    ``start`` is a checkpoint only round one's plan reads, freed after
+    round one's probe like a superseded state. ``held`` are
+    checkpoints every round reads. They and every state but the
+    returned one are freed on exit, a raise included. Still stepping
+    after ``max_rounds`` rounds raises ``RuntimeError``."""
+    state, prev = start, None
+    try:
+        for _ in range(max_rounds):
+            prev, state = state, plan.localCheckpoint(eager=False)
+            seen = probe(state)
+            if prev is not None:
+                free(prev)
+                prev = None
+            plan = step(state, seen)
+            if plan is None:
+                done, state = state, None
+                return done
+        raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+    finally:
+        for df in (prev, state, *held):
+            if df is not None:
+                free(df)
+
+
 def connected_components(
     pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_iter: int = 30
 ) -> DataFrame:
@@ -162,25 +205,14 @@ def connected_components(
     )
     # the star test's orientation precondition only holds for
     # small-star output, so the input always gets at least one round
-    for _ in range(max_iter):
-        prev = edges
-        # LAZY checkpoint (r14, the kcore discipline): the round's
-        # fixpoint probe is the action that materializes it, so a
-        # round costs ONE job instead of an eager-checkpoint job plus
-        # a probe job. Safe because the probe reads the lazy frame
-        # through a single branch (see _is_star_fixpoint) — the
-        # multi-branch-over-lazy-intermediate race cannot occur — and
-        # every other consumer (the next round, the returned labels)
-        # runs only after the probe has materialized it. The
-        # superseded round's blocks are freed only after the probe,
-        # while prev is still read by the new round's plan.
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        done = _is_star_fixpoint(edges)
-        _unpersist_checkpoint(prev)
-        if done:
-            break
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    edges = _fixpoint(
+        _small_star(_large_star(edges)),
+        _is_star_fixpoint,
+        lambda e, star: None if star else _small_star(_large_star(e)),
+        max_iter,
+        "connected_components",
+        start=edges,
+    )
     # fixpoint edge set is a union of stars (u, m): u's label is m,
     # and each star center m labels itself.
     return edges.select(F.col("u").alias("node"), F.col("v").alias("component")).union(
@@ -205,14 +237,13 @@ def kcore(
     clusters from incidental pair chains — the community-strength
     refinement of ``connected_components``.
 
-    Same iterative discipline as connected_components: per-round
-    localCheckpoint with eager frees of the superseded round's blocks,
-    and the fixpoint probe is one count over the NODE-sized degree
-    frame (never the edge list, never a collect of data rows). All
-    victims drop simultaneously per round — exactly what the unrolled
-    DuckDB CTE chain replays (plans/northstar._kcore_sql), so the two
-    engines agree round-for-round; exceeding ``max_rounds`` raises
-    rather than silently diverging from the fixed-unroll oracle."""
+    The state is the NODE-sized degree frame and the fixpoint probe is
+    one count over it (never the edge list, never a collect of data
+    rows). All victims drop simultaneously per round — exactly what
+    the unrolled DuckDB CTE chain replays (plans/northstar._kcore_sql),
+    so the two engines agree round-for-round; exceeding
+    ``max_rounds`` raises rather than silently diverging from the
+    fixed-unroll oracle."""
     und = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u") != F.col("v")
     )
@@ -230,43 +261,25 @@ def kcore(
     # edge was never counted out earlier). The edge list is scanned
     # per round but NEVER rewritten, the per-round shuffle is sized by
     # edges adjacent to the round's victims, and the maintained degree
-    # IS the core degree at the fixpoint — and since r13 ONE job/round
-    # (VERDICT r12 item 8): the round's node-sized checkpoint is LAZY
-    # (localCheckpoint(eager=False)) and the one-row fixpoint probe is
-    # the action that materializes it, so the probe rides the
-    # checkpoint job instead of paying a second local[32] job floor
-    # (~0.16 s/round, the measured fixed cost in README's floor note).
-    # The probe is a SINGLE-branch aggregate over the lazy frame —
-    # the multi-branch-over-lazy-intermediate race (verify-skill
-    # gotcha; bit 3× in r6) cannot occur. The superseded round's
-    # blocks are freed only AFTER the next probe materializes the new
-    # checkpoint (the lazy frame still reads them until then).
-    # Measured honestly: a WASH at sf0.1 (5.55 vs 5.62 s back-to-back
-    # — both forms are fixed-cost dominated there); the win is shuffle
-    # VOLUME, the axis that matters at scale: total shuffled rows
-    # across all rounds are ≤ 2|E| here (each edge contributes once
-    # per endpoint's death) vs Σ_r |E_r| ≈ |E|·rounds for the
-    # rewrite-the-edges form on slowly-shrinking graphs.
-    # All victims still drop simultaneously per round, so the unrolled
-    # DuckDB CTE oracle (plans/northstar._kcore_sql) replays
-    # round-for-round unchanged (driver-hashed).
-    deg = edges.groupBy("u").agg(F.count("*").alias("d")).localCheckpoint(
-        eager=False
-    )
-    prev = None
-    for _ in range(max_rounds):
-        # one node-sized job: materializes deg's checkpoint AND yields
-        # the fixpoint probe + the victim cardinality that gates the
-        # broadcast hint below
-        probe = deg.agg(
+    # IS the core degree at the fixpoint. Measured honestly: a WASH at
+    # sf0.1 (5.55 vs 5.62 s back-to-back — both forms are fixed-cost
+    # dominated there); the win is shuffle VOLUME, the axis that
+    # matters at scale: total shuffled rows across all rounds are
+    # ≤ 2|E| here (each edge contributes once per endpoint's death) vs
+    # Σ_r |E_r| ≈ |E|·rounds for the rewrite-the-edges form on
+    # slowly-shrinking graphs.
+
+    def probe(deg):
+        # also yields the victim cardinality that gates the broadcast
+        # hint in step
+        return deg.agg(
             F.count(F.when(F.col("d") < k, 1)).alias("n_victims"),
             F.count(F.when(F.col("d") >= k, 1)).alias("n_surv"),
         ).collect()[0]
-        if prev is not None:  # safe now: deg no longer reads prev
-            _unpersist_checkpoint(prev)
-            prev = None
-        if probe["n_victims"] == 0:
-            break
+
+    def step(deg, seen):
+        if seen["n_victims"] == 0:
+            return None
         victims = deg.where(F.col("d") < k).select(F.col("u").alias("v"))
         # victims and loss are NODE-sized but sit behind/derive from a
         # localCheckpoint, whose LogicalRDD carries no size stats —
@@ -277,24 +290,26 @@ def kcore(
         # gate is measured, not guessed, riding the probe for free.
         hint = (
             F.broadcast
-            if max(probe["n_victims"], probe["n_surv"]) <= broadcast_max_nodes
+            if max(seen["n_victims"], seen["n_surv"]) <= broadcast_max_nodes
             else (lambda df: df)
         )
         loss = edges.join(hint(victims), "v").groupBy("u").agg(
             F.count("*").alias("lost")
         )
-        prev = deg
-        deg = (
+        return (
             deg.where(F.col("d") >= k)
             .join(hint(loss), "u", "left")
             .select("u", (F.col("d") - F.coalesce(F.col("lost"), F.lit(0))).alias("d"))
-            .localCheckpoint(eager=False)
         )
-    else:
-        raise RuntimeError(f"kcore did not converge in {max_rounds} rounds")
-    if prev is not None:
-        _unpersist_checkpoint(prev)
-    _unpersist_checkpoint(edges)
+
+    deg = _fixpoint(
+        edges.groupBy("u").agg(F.count("*").alias("d")),
+        probe,
+        step,
+        max_rounds,
+        "kcore",
+        held=(edges,),
+    )
     return deg.select(F.col("u").alias("node"), F.col("d").cast("int").alias("core_degree"))
 
 
@@ -319,23 +334,14 @@ def pagerank(
     materialization, no driver-side edge collection. The only
     driver-side values are the node count (once) and the per-iteration
     dangling-mass scalar (a one-row aggregate). Lineage is truncated
-    every round with an eager localCheckpoint and the superseded
-    round's blocks are unpersisted immediately (same discipline as
-    connected_components — VERDICT r4's bench-bleed lesson).
+    with an eager localCheckpoint every second round (see
+    ``_PAGERANK_CHECKPOINT_EVERY``) and the superseded checkpoint is
+    freed at once (VERDICT r4's bench-bleed lesson).
 
     Fixed iteration count, not a float-convergence test: reruns visit
     the identical plan sequence, and ranks differ only by float
     summation order (documented; the registered query is rows-only and
     pytest checks against a NumPy reference with rtol).
-
-    r14: lineage is truncated every ``checkpoint_every`` rounds (2)
-    instead of every round. Within a pair the second round's two
-    references to the first round's ranks (the dangling aggregate and
-    the broadcast build side) share the first round's shuffle via
-    ReusedExchange, so nothing is recomputed, and the pair pays ONE
-    Catalyst planning pass + one checkpoint job instead of two
-    (measured 8.5 → 7.2 s adjacent at sf0.1; intervals of 4+ regress —
-    plan growth outruns the amortization — and were reverted).
     """
     return _pagerank_rounds(
         edges,
@@ -374,13 +380,11 @@ def _pagerank_rounds(
     dangf_type: str,
     empty_rank,
     out,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Shared power-iteration skeleton of ``pagerank`` (float) and
     ``pagerank_fixed`` (scaled integer): identical join/aggregate
     round shape, arithmetic supplied by the callbacks. Kept in one
-    place so the r14 checkpoint-interval tuning cannot drift between
-    the twins."""
+    place so the checkpoint interval cannot drift between the twins."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -444,10 +448,10 @@ def _pagerank_rounds(
             .crossJoin(F.broadcast(dang))
             .select("u", "_dangf", next_rank(n))
         )
-        if (i + 1) % checkpoint_every == 0 or i == n_iter - 1:
+        if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 or i == n_iter - 1:
             ranks = ranks.localCheckpoint()
             if prev is not None:
-                _unpersist_checkpoint(prev)
+                free(prev)
             prev = ranks
     if n_iter <= 0:
         # zero-round call (ADVICE r14): ranks is still a lazy
@@ -456,7 +460,7 @@ def _pagerank_rounds(
         # reads truncated lineage
         ranks = ranks.localCheckpoint()
     for df in (e, ew, nodes_f):
-        _unpersist_checkpoint(df)
+        free(df)
     return out(ranks)
 
 
@@ -488,10 +492,9 @@ def pagerank_fixed(
     Scale shape per iteration: identical to ``pagerank`` — one
     O(|E|) join on the source key, one contribution shuffle to the
     target key, a left join back to the node set, a one-row dangling
-    scalar; localCheckpoint every second round (see pagerank's r14
-    note) + superseded-block frees. Integer arithmetic is unaffected
-    by where lineage is truncated, so the unrolled DuckDB oracle
-    replays bit-identically.
+    scalar; localCheckpoint every second round + superseded-block
+    frees. Integer arithmetic is unaffected by where lineage is
+    truncated, so the unrolled DuckDB oracle replays bit-identically.
     """
     # the same nesting the oracle uses: ((den-num)*scale // den) // n
     def _next(n: int):
@@ -520,9 +523,7 @@ def pagerank_fixed(
     )
 
 
-def triangle_counts(
-    pairs: DataFrame, src: str = "vec_a", dst: str = "vec_b", materialize: bool = True
-) -> DataFrame:
+def triangle_counts(pairs: DataFrame, src: str = "vec_a", dst: str = "vec_b") -> DataFrame:
     """Per-node triangle participation counts over an undirected edge
     list: (node, n_triangles) for every node in >= 1 triangle. The
     local-clustering signal of the near-dup graph — a node closing
@@ -557,10 +558,7 @@ def triangle_counts(
     # sit in ONE action, whose concurrent tasks race past the
     # unfilled cache and re-run the pair join per read; the eager
     # checkpoint runs the upstream exactly once. The edge list itself
-    # is small (near-dup pairs, not the corpus). materialize=False
-    # opts out for callers that can't accept eager execution / pinned
-    # blocks / localCheckpoint's missing fault tolerance
-    # (cf. similarity.cosine_near_dup_pairs).
+    # is small (near-dup pairs, not the corpus).
     e = (
         pairs.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -568,9 +566,8 @@ def triangle_counts(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        e = e.localCheckpoint()
     d = (
         e.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .union(e.select(F.col("b").alias("n"), F.col("a").alias("m")))

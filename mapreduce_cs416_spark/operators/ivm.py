@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC
 from .cdc import latest_changes
+from .checkpoints import free
 
 
 def build_view(
@@ -238,10 +239,9 @@ def cdf_view_step(
             aux={"cursor": new_cursor},
         )
     finally:
-        from .graph import _unpersist_checkpoint
-
-        _unpersist_checkpoint(delta)  # a long-lived consumer must not
-        # accumulate one delta's pinned blocks per trigger
+        # a long-lived consumer must not accumulate one delta's pinned
+        # blocks per trigger
+        free(delta)
     return latest - cursor
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, l2_norm
 from ..sources.tables import read_parquet
+from .checkpoints import free
 
 
 def _prepared(emb: DataFrame) -> DataFrame:
@@ -64,9 +65,7 @@ def brute_force_topk(emb: DataFrame, n_queries: int = 10, k: int = 5) -> DataFra
     )
 
 
-def cosine_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.9, materialize: bool = True
-) -> DataFrame:
+def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (doc_a < doc_b, cos >= t).
 
     Brute-force O(n²) pair join — correct baseline; the LSH bucketing
@@ -88,20 +87,16 @@ def cosine_near_dup_pairs(
     The prepared frame is eagerly materialized (localCheckpoint):
     both sides of the pair join read it, and a lazy cache lets the
     two concurrent references race past the unfilled cache and run
-    the cast+norm prep twice (cf. graph.triangle_counts).
-    ``materialize=False`` skips the checkpoint for callers that
-    cannot accept its costs — building the frame executes the
-    upstream scan eagerly, the pinned blocks outlive the query until
-    freed (graph._unpersist_checkpoint / bench._isolate), and
-    localCheckpoint is NOT fault-tolerant (an executor loss kills
+    the cast+norm prep twice (cf. graph.triangle_counts). Its costs:
+    building the frame executes the upstream scan eagerly, the pinned
+    blocks outlive the query until ``checkpoints.free`` releases them,
+    and localCheckpoint is NOT fault-tolerant (an executor loss kills
     the lineage). At production scale the equivalent durable forms
     are reliable ``checkpoint()`` on HDFS or AQE exchange reuse.
     """
     from .dedup import _spread
 
-    p = _spread(_prepared(emb)).where(F.col("nrm") > 0)
-    if materialize:
-        p = p.localCheckpoint()
+    p = _spread(_prepared(emb)).where(F.col("nrm") > 0).localCheckpoint()
     a = p.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = p.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     dot = F.expr("aggregate(zip_with(va, vb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
@@ -262,7 +257,6 @@ def margin_mine_pairs_lsh(
     n_planes: int = 8,
     n_tables: int = 4,
     dim: int = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """The PRODUCTION face of ``margin_mine_pairs`` (VERDICT r9 item
     4): candidate pairs come from the SAME banded hyperplane LSH as
@@ -288,7 +282,6 @@ def margin_mine_pairs_lsh(
     tie-breaks) — exactly oracled by the DuckDB twin in
     plans/northstar.py, not rows-only."""
     from .dedup import _spread
-    from .graph import _unpersist_checkpoint
 
     p = (
         _spread(_prepared(emb))
@@ -299,7 +292,7 @@ def margin_mine_pairs_lsh(
     # two side orientation joins, and both verify probes — eager
     # materialization or the cast+norm prep re-runs per branch
     # (the cosine_near_dup_lsh lesson, VERDICT r5 item 2)
-    p = _bucketed(p, n_planes, n_tables, dim, materialize=materialize)
+    p = _bucketed(p, n_planes, n_tables, dim)
     try:
         cand = _banded_candidates(p)
         sides = p.select("vec_id", "side")
@@ -332,14 +325,12 @@ def margin_mine_pairs_lsh(
         )
         # the scored set feeds both top-k means AND the margin join —
         # materialize so the candidate generation runs once, not 3×
-        if materialize:
-            scored = scored.localCheckpoint()
+        scored = scored.localCheckpoint()
         return _margin_pairs_from_scored(scored, k, margin_threshold)
     finally:
-        if materialize:
-            # scored is materialized above, so the bucketed frame's
-            # blocks are no longer read by the result plan
-            _unpersist_checkpoint(p)
+        # scored is materialized above, so the bucketed frame's
+        # blocks are no longer read by the result plan
+        free(p)
 
 
 def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -536,7 +527,6 @@ def ivf_topk(
     n_probe: int = 4,
     dim: int = 64,
     centroids: list[list[float]] | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """IVF-style ANN top-k: assign every vector to its nearest
     centroid cell (argmax dot, ties → lowest cell id), probe the
@@ -555,8 +545,7 @@ def ivf_topk(
     checkpoint, so the n_cells·dim centroid literal is analyzed in
     two SMALL plans (assignment job, query-row probe) instead of
     twice inside one large search plan, and the corpus argmax scan
-    never re-runs for the probe side. ``materialize=False`` keeps
-    the old lazy shape.
+    never re-runs for the probe side.
     """
     from .dedup import _spread
 
@@ -568,12 +557,10 @@ def ivf_topk(
         "v",
         "nrm",
         (F.array_position(dots, F.array_max(dots)) - 1).cast("int").alias("cell"),
-    )
-    if materialize:
-        corpus = corpus.localCheckpoint()
+    ).localCheckpoint()
     # per-query probe list: the n_probe best cells by centroid dot
-    # (over the checkpointed corpus when materialized — the dots
-    # recompute touches only the n_queries rows)
+    # (over the checkpointed corpus — the dots recompute touches only
+    # the n_queries rows)
     qd = (
         corpus.where(F.col("vec_id") < n_queries)
         .select(
@@ -607,9 +594,7 @@ def ivf_topk(
     )
 
 
-def _bucketed(
-    p: DataFrame, n_planes: int, n_tables: int, dim: int, materialize: bool = True
-) -> DataFrame:
+def _bucketed(p: DataFrame, n_planes: int, n_tables: int, dim: int) -> DataFrame:
     """``p`` (a prepared (vec_id, v, nrm, ...) frame) plus ``bk``: the
     ``n_tables``-long array of its hyperplane bucket ints, table ``t``
     banding planes of LCG seed 42+t — the ONE checkpoint of every
@@ -630,21 +615,20 @@ def _bucketed(
     the planes as a broadcast one-row frame measured worse, 3.50 s).
     The same checkpoint also serves the vectors to the verify step,
     and a lazy persist would race (cf. graph.triangle_counts). The
-    caller frees it with ``graph._unpersist_checkpoint``.
-    ``materialize=False`` keeps the lazy shape for callers that
-    cannot accept eager execution."""
+    caller frees it with ``checkpoints.free``, on this frame or on any
+    frame derived from it."""
     stacked = [
         plane
         for t in range(n_tables)
         for plane in _hyperplanes(n_planes, dim, seed=42 + t)
     ]
     bk = ", ".join(_bits_sql("_dots", n_planes, base=t * n_planes) for t in range(n_tables))
-    pb = (
+    return (
         p.withColumn("_dots", F.expr(_dots_sql(stacked)))
         .withColumn("bk", F.expr(f"array({bk})"))
         .drop("_dots")
+        .localCheckpoint()
     )
-    return pb.localCheckpoint() if materialize else pb
 
 
 def _bucket_join(pb: DataFrame, *carry: str) -> DataFrame:
@@ -693,14 +677,13 @@ def lsh_candidate_stats(
     races, cf. cosine_near_dup_lsh) and its blocks are freed before
     returning even if a count throws."""
     from .dedup import _spread
-    from .graph import _unpersist_checkpoint
 
     p = _bucketed(_spread(_prepared(emb)).where(F.col("nrm") > 0), n_planes, n_tables, dim)
     try:
         n_cand = _banded_candidates(p).count()
         n_vec = p.count()
     finally:
-        _unpersist_checkpoint(p)
+        free(p)
     spark = emb.sparkSession
     total = n_vec * (n_vec - 1) // 2
     return spark.createDataFrame(
@@ -823,7 +806,6 @@ def cosine_near_dup_lsh(
     n_planes: int = 8,
     n_tables: int = 4,
     dim: int = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded hyperplane LSH —
     the bucketed twin of ``cosine_near_dup_pairs``.
@@ -864,24 +846,20 @@ def cosine_near_dup_lsh(
     vector-carrying pairs through two verify joins — and candidates
     are ~41% of all pairs at the registered 4×8 point.
 
-    With ``materialize`` the returned frame carries that one
-    checkpoint as ``_keyed_ckpt``; free it with
-    ``graph._unpersist_checkpoint`` once the pairs are consumed.
+    The returned pairs read that one checkpoint; ``checkpoints.free``
+    on the pairs releases it once they are consumed.
     """
     # _spread: a single-row-group embeddings file otherwise runs the
     # signature pass and the bucket self-join on one task (see
     # cosine_near_dup_pairs) — bench showed a 17s outlier. Zero-norm
     # guard: cf. cosine_near_dup_pairs — output parity with the exact
-    # twin requires the same NaN-proofing. materialize=False escape
-    # hatch: see cosine_near_dup_pairs (eager execution, pinned
-    # blocks, no fault tolerance; reliable checkpoint is the durable
-    # form).
+    # twin requires the same NaN-proofing.
     from .dedup import _spread
 
     p = _spread(_prepared(emb)).where(F.col("nrm") > 0)
-    pb = _bucketed(p, n_planes, n_tables, dim, materialize=materialize)
+    pb = _bucketed(p, n_planes, n_tables, dim)
     dot = F.expr("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-    out = (
+    return (
         _bucket_join(pb, "v", "nrm")
         .select(
             F.col("a.vec_id").alias("vec_a"),
@@ -892,9 +870,6 @@ def cosine_near_dup_lsh(
         .select("vec_a", "vec_b", F.round("cos", 6).alias("score"))
         .distinct()
     )
-    if materialize:
-        out._keyed_ckpt = pb  # type: ignore[attr-defined] — freeable handle
-    return out
 
 
 def semantic_dedup(
@@ -903,7 +878,6 @@ def semantic_dedup(
     threshold: float = 0.5,
     dim: int = 64,
     centroids: list[list[float]] | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, then drop every
@@ -935,16 +909,14 @@ def semantic_dedup(
     p = _spread(_prepared(emb)).where(F.col("nrm") > 0)
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim)
     dots = F.expr(_dots_sql(cents, "v"))  # one tree, not n_cells trees (r14)
-    assigned = p.select(
-        "vec_id", "v", "nrm", (F.array_position(dots, F.array_max(dots)) - 1).cast("int").alias("cell")
-    )
     # eagerly materialize the assignment (r15, the _banded_candidates
     # lesson): the frame feeds BOTH sides of the intra-cell pair join
     # AND the final anti-join left side, so without the checkpoint the
     # centroid literal is analyzed and the argmax scan executed up to
     # three times per action; checkpointed, literal + scan run once
-    if materialize:
-        assigned = assigned.localCheckpoint()
+    assigned = p.select(
+        "vec_id", "v", "nrm", (F.array_position(dots, F.array_max(dots)) - 1).cast("int").alias("cell")
+    ).localCheckpoint()
     a = assigned.select(
         F.col("cell"), F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
@@ -1113,7 +1085,6 @@ def lsh_eval(
     (plans/northstar.SIMILARITY_EVAL_LSH_SQL).
     """
     from .dedup import _spread
-    from .graph import _unpersist_checkpoint
 
     spark = emb.sparkSession
     out = None
@@ -1163,6 +1134,6 @@ def lsh_eval(
                 .localCheckpoint()
             )
         finally:
-            _unpersist_checkpoint(p)
+            free(p)
         out = row if out is None else out.unionByName(row)
     return out

@@ -581,7 +581,6 @@ def source_unigram_kl(
     docs: DataFrame,
     vocab_size: int = 25,
     alpha: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Distribution-drift score per source: smoothed KL divergence of
     each source's unigram distribution from the corpus-wide one,
@@ -607,10 +606,9 @@ def source_unigram_kl(
     corpus-size-independent (distinct tokens grow with the corpus,
     Heaps' law); at the 100 TB point this intermediate belongs in a
     parquet artifact or reliable checkpoint rather than pinned
-    executor storage, and ``materialize=False`` lets a caller manage
-    that externally. Downstream: the corpus-wide vocabulary is the top-V of the
-    counters summed over sources (identical counts to a second stream
-    scan, without one), the vocab filter is a broadcast semi-join on
+    executor storage. Downstream: the corpus-wide vocabulary is the
+    top-V of the counters summed over sources (identical counts to a
+    second stream scan, without one), the vocab filter is a broadcast semi-join on
     the counters, and the |sources|×V grid is built by broadcast
     cross join — tiny, whatever the corpus size. (The previous shape
     scanned + shuffled the token stream twice: once for the
@@ -627,11 +625,7 @@ def source_unigram_kl(
     # the counters feed the vocabulary branch AND the filter branch of
     # one action → eager localCheckpoint (lazy persist races, see
     # shingle_postings); bounded at |sources|·|distinct tokens| rows.
-    # materialize=False opts out (cf. cosine_near_dup_pairs's note on
-    # eager execution / pinned blocks / fault tolerance).
-    per_src_all = toks.groupBy("source", "tok").agg(F.count("*").alias("cst"))
-    if materialize:
-        per_src_all = per_src_all.localCheckpoint()
+    per_src_all = toks.groupBy("source", "tok").agg(F.count("*").alias("cst")).localCheckpoint()
     corpus_counts = per_src_all.groupBy("tok").agg(F.sum("cst").alias("c"))
     vocab = ranked_topk(corpus_counts, [F.desc("c"), F.col("tok")], vocab_size, rn="id").select(
         "tok"

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import decimal_sum
+from ..operators.checkpoints import free
 from ..sources.tables import load_table, parquet_schema, read_parquet, utcify
 
 
@@ -474,8 +475,6 @@ def streaming_ingest_gate(
     from ..operators import dedup
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.graph import _unpersist_checkpoint
-
         tx = dedup._is_tx_index(index_path)
         # the batch feeds the gate AND the admitted-docs filter; the
         # decisions feed the sink AND the admission filter —
@@ -527,8 +526,8 @@ def streaming_ingest_gate(
                 )
                 dedup.append_ingest_index(admitted, index_path, k)
         finally:
-            _unpersist_checkpoint(gated)
-            _unpersist_checkpoint(b)
+            free(gated)
+            free(b)
 
     return (
         docs.writeStream.foreachBatch(_gate)
@@ -585,7 +584,6 @@ def streaming_cdc_merge(
     drain-then-stop contract as streaming_ingest_gate).
     """
     from ..operators import cdc
-    from ..operators.graph import _unpersist_checkpoint
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
@@ -596,7 +594,7 @@ def streaming_cdc_merge(
         try:
             merged.write.mode("overwrite").parquet(snapshot_path)
         finally:
-            _unpersist_checkpoint(merged)
+            free(merged)
 
     return (
         changes.writeStream.foreachBatch(_merge)
@@ -676,7 +674,6 @@ def streaming_view_maintenance(
     as streaming_cdc_merge; partition-scoped overwrite bounds it.
     """
     from ..operators import cdc, ivm
-    from ..operators.graph import _unpersist_checkpoint
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
@@ -694,8 +691,8 @@ def streaming_view_maintenance(
             new_view.write.mode("overwrite").parquet(view_path)
             new_snap.write.mode("overwrite").parquet(snapshot_path)
         finally:
-            _unpersist_checkpoint(new_view)
-            _unpersist_checkpoint(new_snap)
+            free(new_view)
+            free(new_snap)
 
     return (
         changes.writeStream.foreachBatch(_apply)

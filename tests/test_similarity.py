@@ -491,18 +491,21 @@ def test_margin_mining_lsh_recovers_planted_pairs_from_sparse_candidates(spark, 
     )
     from pyspark.sql import functions as F
 
+    from mapreduce_cs416_spark.operators.checkpoints import free
+
     p = _prepared(planted).where(F.col("nrm") > 0)
     n = p.count()
-    pb = _bucketed(p, n_planes=8, n_tables=4, dim=64, materialize=False)
+    pb = _bucketed(p, n_planes=8, n_tables=4, dim=64)
     n_cand = _banded_candidates(pb).count()
+    free(pb)
     assert n_cand < 0.10 * n * (n - 1) / 2
 
 
 def test_cosine_near_dup_lsh_keyed_blocks_are_freeable(spark, clustered_emb):
-    """The returned pairs frame carries the call's one checkpoint, so a
-    library caller can free its blocks once the pairs are consumed:
-    after freeing that handle no RDD the call stored stays pinned."""
-    from mapreduce_cs416_spark.operators.graph import _unpersist_checkpoint
+    """The returned pairs read the call's one checkpoint, so a library
+    caller can free its blocks once the pairs are consumed: after
+    ``free(pairs)`` no RDD the call stored stays pinned."""
+    from mapreduce_cs416_spark.operators.checkpoints import free
 
     def stored() -> set[int]:
         return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
@@ -510,15 +513,13 @@ def test_cosine_near_dup_lsh_keyed_blocks_are_freeable(spark, clustered_emb):
     before = stored()
     pairs = similarity.cosine_near_dup_lsh(clustered_emb, 0.9, n_planes=8, n_tables=4, dim=DIM)
     assert pairs.collect()
-    keyed_id = pairs._keyed_ckpt._jdf.queryExecution().analyzed().rdd().id()
 
-    assert keyed_id in stored()
-    _unpersist_checkpoint(pairs._keyed_ckpt)
+    assert stored() - before
+    free(pairs)
     assert stored() - before == set()
 
 
-@pytest.mark.parametrize("materialize", [True, False])
-def test_cosine_near_dup_lsh_pair_in_many_buckets_emitted_once(spark, materialize):
+def test_cosine_near_dup_lsh_pair_in_many_buckets_emitted_once(spark):
     """The cosine is scored once per shared (table, bucket): identical
     vectors collide in every table, yet each pair comes out exactly
     once, with the exact twin's score."""
@@ -527,9 +528,7 @@ def test_cosine_near_dup_lsh_pair_in_many_buckets_emitted_once(spark, materializ
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     lsh = [
         tuple(r)
-        for r in similarity.cosine_near_dup_lsh(
-            emb, 0.9, n_planes=8, n_tables=4, dim=DIM, materialize=materialize
-        ).collect()
+        for r in similarity.cosine_near_dup_lsh(emb, 0.9, n_planes=8, n_tables=4, dim=DIM).collect()
     ]
     exact = [tuple(r) for r in similarity.cosine_near_dup_pairs(emb, 0.9).collect()]
     assert sorted(lsh) == sorted(exact)

@@ -20,21 +20,18 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import _steal_counters
+
 THRESH_PCT = 1.5
 MAX_WAIT_S = 900
 
 
-def _stat() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    v = list(map(int, p[1:9]))
-    return v[7], sum(v)
-
-
 def steal_pct(window_s: float = 3.0) -> float:
-    s0, t0 = _stat()
+    s0, t0 = _steal_counters()
     time.sleep(window_s)
-    s1, t1 = _stat()
+    s1, t1 = _steal_counters()
     return 100.0 * (s1 - s0) / max(t1 - t0, 1)
 
 
@@ -52,7 +49,7 @@ def main() -> int:
                 return 3
             time.sleep(20)
         t0 = time.time()
-        s0, c0 = _stat()
+        s0, c0 = _steal_counters()
         env = dict(os.environ, SPARK_GRAFT_BENCH_JSON="/tmp/quiet_bench_last.json")
         r = subprocess.run(
             [sys.executable, "bench.py", *args],
@@ -61,7 +58,7 @@ def main() -> int:
             capture_output=True,
             text=True,
         )
-        s1, c1 = _stat()
+        s1, c1 = _steal_counters()
         run_steal = 100.0 * (s1 - s0) / max(c1 - c0, 1)
         line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "{}"
         # returncode gate BEFORE the parse (ADVICE r14): a failed bench
