@@ -73,55 +73,6 @@ def run_mapreduce(
     return spark.createDataFrame(reduced, _KV_SCHEMA)
 
 
-def run_mapreduce_arrow(
-    records: DataFrame,
-    mapf: MapF,
-    reducef: ReduceF,
-    n_partitions: int = 10,
-) -> DataFrame:
-    """``run_mapreduce`` with identical plugin semantics but
-    Arrow-batched transport — the scale path for user map/reduce
-    callables.
-
-    The user functions are still called per record/key (that IS the
-    plugin contract, mr/worker.go:95,164-177), but rows move between
-    JVM and Python as Arrow record batches instead of pickled Python
-    rows: map runs inside mapInPandas over each batch, and the
-    holistic reduce gets each key's full value list via
-    groupBy().applyInPandas — one pandas frame per key, the exact
-    full-group contract, without groupByKey's per-row pickling.
-    Same skew caveat as any holistic reduce: a mega-key materializes
-    one group in one worker (mitigate with operators/skew for
-    decomposable aggregations).
-
-    ``n_partitions`` is accepted for signature parity; the grouped
-    result is partitioning-invariant and Spark sizes the shuffle
-    itself (AQE).
-    """
-    del n_partitions  # physical detail — Spark's shuffle decides
-
-    def _map(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            keys: list[str] = []
-            vals: list[str] = []
-            for fname, contents in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                for k, v in mapf(fname, contents):
-                    keys.append(k)
-                    vals.append(v)
-            yield pd.DataFrame({"key": keys, "value": vals})
-
-    def _reduce(pdf):
-        import pandas as pd
-
-        k = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [k], "value": [reducef(k, pdf["value"].tolist())]})
-
-    kv = records.mapInPandas(_map, _KV_SCHEMA)
-    return kv.groupBy("key").applyInPandas(_reduce, _KV_SCHEMA)
-
-
 def mr_output_lines(result: DataFrame, key: str = "key", value: str = "value") -> DataFrame:
     """Format a grouped result the way the reference writes mr-out files:
     one text line per key, "%v %v" (mr/worker.go:175; rule README.md:195).

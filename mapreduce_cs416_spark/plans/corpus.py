@@ -247,18 +247,6 @@ def mr_wordcount_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("key").alias("word"), F.col("value").cast("bigint").alias("cnt"))
 
 
-def mr_wordcount_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME wc.go plugins through run_mapreduce_arrow — identical
-    plugin contract, Arrow-batched transport (mapInPandas +
-    applyInPandas) instead of pickled RDD rows: the scale path for
-    user callables. Shares the wordcount oracle with both twins."""
-    from ..operators.mapreduce import run_mapreduce_arrow
-
-    mapf, reducef = _wc_plugins()
-    out = run_mapreduce_arrow(_mr_docs(spark, sf_dir), mapf, reducef)
-    return out.select(F.col("key").alias("word"), F.col("value").cast("bigint").alias("cnt"))
-
-
 QUERIES: dict[str, QuerySpec] = {
     q.name: q
     for q in [
@@ -286,7 +274,6 @@ EXTRA_QUERIES: dict[str, QuerySpec] = {
         QuerySpec("inverted_index_salted", inverted_index_salted, INVERTED_INDEX_SQL, inverted_index_salted.__doc__, tags=("reference", "B2", "skew")),
         QuerySpec("file_stats_salted", file_stats_salted, FILE_STATS_SQL, file_stats_salted.__doc__, tags=("reference", "B4", "B5", "skew")),
         QuerySpec("mr_wordcount_compat", mr_wordcount_compat, WORDCOUNT_SQL, mr_wordcount_compat.__doc__, tags=("reference", "compat", "A15")),
-        QuerySpec("mr_wordcount_arrow", mr_wordcount_arrow, WORDCOUNT_SQL, mr_wordcount_arrow.__doc__, tags=("reference", "compat", "A15", "arrow")),
         QuerySpec("file_count", file_count, FILE_COUNT_SQL, file_count.__doc__, tags=("reference", "B8")),
     ]
 }

@@ -48,7 +48,12 @@ public designs) fix this with the same ideas reproduced here:
    r9 item 2: the read half of the lakehouse story). The full
    predicate is always re-applied as a row filter after the scan, so
    pruning is purely an I/O optimization and can never change
-   results; unparseable predicates simply prune nothing.
+   results; unparseable predicates simply prune nothing. Every
+   writer (batch writes, the streaming sink, its compaction) takes
+   the stats from ONE function, ``_bucket_stats``, over the written
+   rows in Arrow — batch writes read each bucket's stats columns
+   back with pyarrow, no Spark job — and a float column holding NaN
+   gets no stats, so a prune never drops NaN rows the filter keeps.
 
 Crash/replay contract: data directories are written BEFORE the
 manifest publish, so a crash mid-commit leaves orphan directories and
@@ -532,190 +537,70 @@ def _written_buckets(path: str, rel: str) -> list[int]:
     return sorted(int(d.split("=", 1)[1]) for d in leaves)
 
 
-def _collect_stats(spark: SparkSession, path: str, rel: str) -> dict:
+def _collect_stats(path: str, rel: str, schema: T.StructType) -> dict:
     """Per-bucket min/max column stats for a just-written version
-    directory, read back from the written files (so the merge plan is
-    never recomputed). Keyed ``stats[rel][bucket][col] = [min, max]``
-    in the manifest; used by ``read_table`` to prune range predicates.
-    Dates are stored ISO strings (lexicographic compare ==
-    chronological); timestamps persist as UTC MICROS — tz-independent
-    ints (r12) — so readers in any session timezone prune correctly
-    (legacy ISO-string timestamp stats from pre-r12 tables take the
-    naive comparison path in ``_stats_keep``). A version directory
-    with no bucket leaves (delete-only merge) has nothing to profile.
-
-    r15 (guide §6, §1.2): stats come from the PARQUET FOOTERS of the
-    just-written files — a driver-side metadata walk, not a Spark
-    re-scan job (the scan was a measured ~0.9 s fixed cost per
-    manifest-writing query at sf0.1, and at scale it re-reads the
-    whole write volume). The values are the same min/max the scan
-    aggregated, because this module is the only writer of these
-    directories and Spark's parquet writer stores exact chunk-level
-    stats for every ``_STATS_TYPES`` column (pinned by a
-    footer-vs-scan equality test in tests/test_manifest_stats.py).
-    Float/double columns whose footer max is NaN-poisoned get NO
-    stats entry — see ``_FLOAT_NAN_NOTE``; any unreadable/unexpected
-    footer falls back to the old Spark scan for the whole directory.
-    """
-    vdir = os.path.join(path, rel)
-    if not any(d.startswith(f"{_BUCKET_COL}=") for d in os.listdir(vdir)):
-        return {}
-    try:
-        return _collect_stats_footers(vdir)
-    except Exception:  # noqa: BLE001 — unexpected footer shape: scan
-        return _collect_stats_scan(spark, vdir)
-
-
-# Why float/double stats are DROPPED when NaN is present (instead of
-# persisting the NaN): Spark's comparison semantics order NaN ABOVE
-# every numeric (``double('NaN') > 5.0`` is true), so the row filter
-# KEEPS NaN rows under ``x > lit`` — while a persisted NaN max
-# compares False against everything in ``_stats_keep``'s Python
-# comparisons, which would prune the directory and silently drop rows
-# the filter would return (this exact mis-prune existed in the old
-# Spark-scan path: F.max over a NaN column collects NaN, json round-
-# trips it, and ``nan > lit`` is False — pinned by a regression test
-# now). Spark's writer poisons the footer max to NaN whenever any NaN
-# was written (observed and test-pinned for this Spark version), so
-# "max != max" is exactly the NaN-presence detector; no stats → no
-# pruning on that column → always correct.
-_FLOAT_NAN_NOTE = True
-
-
-def _collect_stats_footers(vdir: str) -> dict:
-    """Footer-walk implementation of ``_collect_stats``: aggregate
-    chunk-level min/max across every row group of every parquet file
-    under each ``_bucket=N`` leaf. Raises on anything unexpected
-    (missing stats for a non-all-null chunk, unknown arrow type, a
-    timestamp not in micros) — the caller falls back to the scan."""
+    directory, keyed ``stats[rel][bucket][col] = [min, max]`` in the
+    manifest; used by ``read_table`` to prune range predicates.
+    ``schema`` is the written frame's schema. Each ``_bucket=N`` leaf's
+    parquet files are read back with pyarrow, only the stats columns,
+    and profiled by :func:`_bucket_stats` — the function the streaming
+    sink applies to its in-memory partitions — so no Spark job runs
+    and the merge plan is never recomputed. Every written bucket gets
+    an entry, ``{}`` when it has no stats column to profile; a version
+    directory with no bucket leaves (delete-only merge) gives ``{}``."""
     import pyarrow.parquet as pq
 
-    out: dict = {}
-    kinds: dict[str, str] | None = None
-    for leaf in sorted(os.listdir(vdir)):
-        if not leaf.startswith(f"{_BUCKET_COL}="):
-            continue
-        bdir = os.path.join(vdir, leaf)
-        bucket = leaf.split("=", 1)[1]
-        agg: dict[str, list] = {}
-        nan_poisoned: set[str] = set()
-        for fn in os.listdir(bdir):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.read_metadata(os.path.join(bdir, fn))
-            if kinds is None:
-                kinds = {}
-                for field in md.schema.to_arrow_schema():
-                    k = _arrow_stat_kind(field.type)
-                    if k is not None:
-                        kinds[field.name] = k
-            if not kinds:
-                break  # no stats-typed columns: {} per bucket, as the scan
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    name = col.path_in_schema
-                    kind = kinds.get(name)
-                    if kind is None:
-                        continue
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        if st is not None and st.num_values == 0:
-                            continue  # all-null chunk: nothing to fold
-                        raise ValueError(f"no stats for {name} in {fn}")
-                    if kind == "ts":
-                        # physical INT64 micros — the exact
-                        # unix_micros value the scan path collected
-                        mn, mx = st.min_raw, st.max_raw
-                    elif kind == "date":
-                        mn, mx = st.min.isoformat(), st.max.isoformat()
-                    else:
-                        mn, mx = st.min, st.max
-                    if kind == "float" and (mn != mn or mx != mx):
-                        nan_poisoned.add(name)
-                        continue
-                    cur = agg.get(name)
-                    if cur is None:
-                        agg[name] = [mn, mx]
-                    else:
-                        cur[0] = min(cur[0], mn)
-                        cur[1] = max(cur[1], mx)
-        out[bucket] = {
-            c: v for c, v in agg.items() if c not in nan_poisoned
-        }
-    return out
+    vdir = os.path.join(path, rel)
+    cols = [f.name for f in schema.fields if _has_stats(f)]
+    return {
+        leaf.split("=", 1)[1]: _bucket_stats(
+            pq.read_table(os.path.join(vdir, leaf), columns=cols), schema
+        )
+        for leaf in sorted(os.listdir(vdir))
+        if leaf.startswith(f"{_BUCKET_COL}=")
+    }
 
 
-def _arrow_stat_kind(t) -> str | None:
-    """Map an arrow field type to its stats handling, None = no stats
-    (mirrors ``_STATS_TYPES``: orderable atomics, decimals skipped)."""
+def _has_stats(field: T.StructField) -> bool:
+    return field.name != _BUCKET_COL and isinstance(field.dataType, _STATS_TYPES)
+
+
+def _bucket_stats(table, schema: T.StructType) -> dict:
+    """``{col: [min, max]}`` of one bucket's Arrow ``table`` for every
+    ``schema`` field with stats, JSON-ready: dates as ISO strings
+    (lexicographic == chronological), timestamps as UTC micros ints
+    (tz-independent, r12 — INT96 files read as nanoseconds, hence the
+    cast to micros first). An all-null column gets no entry.
+
+    A float/double column holding any NaN gets no entry either: Spark
+    orders NaN above every numeric (``double('NaN') > 5.0`` is true),
+    so its row filter keeps NaN rows under ``x > lit``, while pruning
+    on a finite max (what arrow's min_max and some parquet writers
+    report, skipping NaN) or on a NaN max (which Python-compares False)
+    would drop them. No stats, no pruning on that column — always
+    correct. The NaN check reads the data, so it holds whatever a
+    parquet writer put in its footers."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    if pa.types.is_integer(t):
-        return "int"
-    if pa.types.is_float32(t) or pa.types.is_float64(t):
-        return "float"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "str"
-    if pa.types.is_date32(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        if t.unit != "us":
-            raise ValueError(f"unexpected timestamp unit {t.unit}")
-        return "ts"
-    return None
-
-
-def _collect_stats_scan(spark: SparkSession, vdir: str) -> dict:
-    """The pre-r15 Spark-scan implementation — the fallback when a
-    footer is unreadable, and the equality baseline the footer path is
-    test-pinned against. NaN-poisoned float/double aggregates are
-    dropped here too (the _FLOAT_NAN_NOTE mis-prune guard)."""
-    df = spark.read.parquet(vdir)
-    cols = [
-        f.name
-        for f in df.schema.fields
-        if f.name != _BUCKET_COL and isinstance(f.dataType, _STATS_TYPES)
-    ]
-    if not cols:
-        return {
-            leaf.split("=", 1)[1]: {}
-            for leaf in os.listdir(vdir)
-            if leaf.startswith(f"{_BUCKET_COL}=")
-        }
-    by_type = {f.name: f.dataType for f in df.schema.fields}
-    aggs = []
-    for c in cols:
-        if isinstance(by_type[c], T.TimestampType):
-            # timestamps persist as UTC MICROS (tz-independent ints):
-            # an ISO-formatted collect() value is naive in the
-            # WRITER's session timezone, and comparing it against a
-            # literal parsed in a different READER timezone would
-            # mis-prune (VERDICT r11 item 6). unix_micros is the
-            # instant itself — no timezone round-trip at all.
-            expr = F.unix_micros(F.col(c))
-        else:
-            expr = F.col(c)
-        aggs += [F.min(expr).alias(f"mn_{c}"), F.max(expr).alias(f"mx_{c}")]
-    out: dict = {}
-    for r in df.groupBy(_BUCKET_COL).agg(*aggs).collect():
-        ent = {}
-        for c in cols:
-            mn, mx = r[f"mn_{c}"], r[f"mx_{c}"]
-            if mn is None or mx is None:
+    out = {}
+    for f in schema.fields:
+        if not _has_stats(f):
+            continue
+        col = table.column(f.name)
+        if col.null_count == len(col):
+            continue
+        if isinstance(f.dataType, T.TimestampType):
+            col = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64())
+        elif isinstance(f.dataType, (T.FloatType, T.DoubleType)):
+            if pc.any(pc.is_nan(col)).as_py():
                 continue
-            if isinstance(mn, float) and (mn != mn or mx != mx):
-                continue  # NaN-poisoned: see _FLOAT_NAN_NOTE
-            ent[c] = [_json_safe(mn), _json_safe(mx)]
-        out[str(r[_BUCKET_COL])] = ent
+        mm = pc.min_max(col)
+        mn, mx = mm["min"].as_py(), mm["max"].as_py()
+        if isinstance(f.dataType, T.DateType):
+            mn, mx = mn.isoformat(), mx.isoformat()
+        out[f.name] = [mn, mx]
     return out
-
-
-def _json_safe(v):
-    if hasattr(v, "isoformat"):
-        return v.isoformat(sep=" ") if hasattr(v, "hour") else v.isoformat()
-    return v
 
 
 def _bucket_dirs(path: str, manifest: dict, buckets: list[int]) -> list[str]:
@@ -1158,7 +1043,7 @@ def _stats_keep(
                     # legacy NaN-poisoned stats (pre-r15 manifests):
                     # NaN Python-compares False against everything,
                     # which would wrongly prune — keep the directory
-                    # (_FLOAT_NAN_NOTE)
+                    # (see _bucket_stats)
                     continue
             else:
                 continue
@@ -1262,7 +1147,7 @@ def create_table(
     _write_buckets(with_bucket, path, rel)
     written = _written_buckets(path, rel)
     manifest["buckets"] = {str(b): [rel] for b in written}
-    manifest["stats"] = {rel: _collect_stats(df.sparkSession, path, rel)}
+    manifest["stats"] = {rel: _collect_stats(path, rel, df.schema)}
     if aux:
         manifest["aux"] = {}
         for name, adf in aux.items():
@@ -1600,7 +1485,7 @@ def _merge_stage(
             else:
                 # every row in the bucket was deleted — drop its entry
                 buckets.pop(str(b), None)
-        stats[rel] = _collect_stats(spark, path, rel)
+        stats[rel] = _collect_stats(path, rel, merged.schema)
     # a merged bucket is fully rewritten with its deletion vectors
     # already applied — clear them
     dvs = {b: list(rels) for b, rels in manifest.get("dvs", {}).items()}
@@ -1933,7 +1818,7 @@ def append_into(
     if not written:
         shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
         return first  # empty batch: no new version
-    rel_stats = _collect_stats(spark, path, rel)
+    rel_stats = _collect_stats(path, rel, batch.schema)
 
     last: CommitConflict | None = None
     manifest = first
@@ -2194,7 +2079,7 @@ def _delete_once(spark: SparkSession, path: str, predicate: str) -> dict:
             dvs.pop(str(b), None)
     stats = dict(manifest.get("stats", {}))
     if written:
-        stats[rel] = _collect_stats(spark, path, rel)
+        stats[rel] = _collect_stats(path, rel, remaining.schema)
     live_rels = {r for rels in buckets.values() for r in rels}
     stats = {r: s for r, s in stats.items() if r in live_rels}
     new_manifest = {
@@ -2278,7 +2163,7 @@ def compact(
                 if not buckets[str(b)]:
                     buckets.pop(str(b), None)
             for srel in {r for rels in by_bucket.values() for r in rels}:
-                stats[srel] = _collect_stats(spark, path, srel)
+                stats[srel] = _collect_stats(path, srel, df.schema)
         else:
             _write_buckets(df, path, rel)
             written = set(_written_buckets(path, rel))
@@ -2290,7 +2175,7 @@ def compact(
                     # folded bucket is empty — drop its entry
                     buckets.pop(str(b), None)
             if written:
-                stats[rel] = _collect_stats(spark, path, rel)
+                stats[rel] = _collect_stats(path, rel, df.schema)
         live_rels = {r for rels in buckets.values() for r in rels}
         stats = {r: s for r, s in stats.items() if r in live_rels}
         new_manifest = {
@@ -2573,7 +2458,7 @@ def repartition_table(
             written = _written_buckets(path, rel)
             new_manifest["buckets"] = {str(b): [rel] for b in written}
             new_manifest["stats"] = (
-                {rel: _collect_stats(spark, path, rel)} if written else {}
+                {rel: _collect_stats(path, rel, df.schema)} if written else {}
             )
         else:
             new_manifest["buckets"] = {}

@@ -30,9 +30,11 @@ How a micro-batch lands (all public machinery):
   keys (the event-time layout; tz-independent because timestamps
   store UTC micros). It writes one parquet file per bucket under a
   task-unique staging directory ``data/vs{batch}-{token}``, plus
-  per-bucket min/max stats computed from the in-memory Arrow data
-  (same ``stats[rel][bucket][col]`` shape ``_collect_stats``
-  produces, so ``read_table``'s range pruning sees sink batches too).
+  per-bucket min/max stats computed from the in-memory Arrow data by
+  ``manifest._bucket_stats`` — the one stats function, which
+  ``_collect_stats`` applies to batch-written buckets too — so
+  ``read_table``'s range pruning sees sink batches exactly as it
+  sees batch writes.
   No shuffle, no second job: bucketing happens where the rows already
   are, and a bucket simply receives one file per task that saw its
   keys (``compact`` folds them, as with any append).
@@ -187,15 +189,11 @@ def _auto_maintain_arrow(path: str, commit_retries: int) -> int:
             d = os.path.join(path, rel, f"{mf._BUCKET_COL}={b}")
             os.makedirs(d, exist_ok=True)
             pq.write_table(folded, os.path.join(d, "part-0.parquet"))
-            st = _arrow_stats(folded, schema)
-            if st:
-                new_stats[str(b)] = st
+            new_stats[str(b)] = mf._bucket_stats(folded, schema)
         buckets = {b: list(rels) for b, rels in manifest["buckets"].items()}
         for b in targets:
             buckets[str(b)] = [rel]
-        stats = dict(manifest.get("stats", {}))
-        if new_stats:
-            stats[rel] = new_stats
+        stats = {**manifest.get("stats", {}), rel: new_stats}
         live = {r for rels in buckets.values() for r in rels}
         stats = {r: s for r, s in stats.items() if r in live}
         new_manifest = {
@@ -222,46 +220,6 @@ def _auto_maintain_arrow(path: str, commit_retries: int) -> int:
                 orphan_min_age_s=float(props.get("maintain.orphan_age_s", 3600.0)),
             )
     return folded_total
-
-
-def _arrow_stats(table, schema) -> dict:
-    """Per-column [min, max] of one bucket's Arrow table, restricted
-    to the same orderable types and JSON encoding _collect_stats
-    persists (dates/timestamps ISO — lexicographic == chronological)."""
-    import pyarrow.compute as pc
-
-    from pyspark.sql import types as T
-
-    import pyarrow as pa
-
-    out = {}
-    by_name = {f.name: f for f in schema.fields}
-    for name in table.column_names:
-        f = by_name.get(name)
-        if f is None or not isinstance(f.dataType, mf._STATS_TYPES):
-            continue
-        col = table.column(name)
-        if col.null_count == len(col):
-            continue
-        if isinstance(f.dataType, T.TimestampType):
-            # same tz-independent encoding _collect_stats persists:
-            # UTC micros ints (the arrow timestamp's storage value)
-            col = col.cast(pa.int64())
-        if isinstance(f.dataType, (T.FloatType, T.DoubleType)) and pc.any(
-            pc.is_nan(col)
-        ).as_py():
-            # NaN present → NO stats for this column (mf._FLOAT_NAN_NOTE):
-            # Spark's filter orders NaN above every numeric, so any
-            # finite max here (arrow min_max skips NaN) — or a NaN max
-            # (Python-compares False) — would mis-prune rows the
-            # filter keeps
-            continue
-        mm = pc.min_max(col)
-        mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        if mn is None or mx is None:
-            continue
-        out[name] = [mf._json_safe(mn), mf._json_safe(mx)]
-    return out
 
 
 class ManifestStreamWriter(DataSourceStreamArrowWriter):
@@ -358,9 +316,7 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
             os.makedirs(d, exist_ok=True)
             pq.write_table(part, os.path.join(d, f"part-{uuid.uuid4().hex[:8]}.parquet"))
             written.append(int(b))
-            st = _arrow_stats(part, schema)
-            if st:
-                stats[str(b)] = st
+            stats[str(b)] = mf._bucket_stats(part, schema)
         return StagedAppend(rel=rel, buckets=written, stats=stats, rows=table.num_rows)
 
     # -- driver side -------------------------------------------------------
@@ -429,8 +385,7 @@ class ManifestStreamWriter(DataSourceStreamArrowWriter):
             for m in staged:
                 for b in m.buckets:
                     buckets.setdefault(str(b), []).append(m.rel)
-                if m.stats:
-                    stats[m.rel] = m.stats
+                stats[m.rel] = m.stats
             cursors = dict(manifest.get("stream_cursors", {}))
             cursors[self.sink_id] = batchId
             new_manifest = {

@@ -83,7 +83,6 @@ def _check_name(name: str) -> None:
 
 
 def _stage_member(
-    spark: SparkSession,
     root: str,
     name: str,
     df: DataFrame,
@@ -105,7 +104,7 @@ def _stage_member(
     )
     written = mf._written_buckets(member, rel)
     entry["buckets"] = {str(b): [rel] for b in written}
-    entry["stats"] = {rel: mf._collect_stats(spark, member, rel)}
+    entry["stats"] = {rel: mf._collect_stats(member, rel, df.schema)}
     return entry, rel
 
 
@@ -126,7 +125,7 @@ def create_group(
     for name, spec in members.items():
         _check_name(name)
         tables[name], _ = _stage_member(
-            spark, root, name, spec["df"], spec["key_cols"],
+            root, name, spec["df"], spec["key_cols"],
             spec.get("n_buckets", 16), spec.get("partition_expr"), 1,
         )
     manifest = {"version": 1, "op": "create_group", "tables": tables}
@@ -316,7 +315,7 @@ def _transact_once(
             entry = _member_entry(g, name)
             member = os.path.join(root, name)
             new_entry, rel = _stage_member(
-                spark, root, name, df, entry["key_cols"],
+                root, name, df, entry["key_cols"],
                 # keep the member's layout across replacement
                 1, entry["partition_expr"], new_version,
             )

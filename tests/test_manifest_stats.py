@@ -1,33 +1,80 @@
-"""r15 stats pins: (1) the footer-walk ``_collect_stats`` produces
-byte-identical stats to the Spark-scan baseline it replaced (guide §6
-— the post-write re-scan was a measured fixed cost per
-manifest-writing query), and (2) the NaN mis-prune guard: Spark
-orders NaN ABOVE every numeric (``double('NaN') > 5.0`` is true), so
-a NaN-poisoned max — which Python-compares False against everything —
-must never be persisted where ``_stats_keep`` would use it to drop a
-directory whose NaN rows the row filter keeps."""
+"""Per-bucket min/max stats pins. Every manifest writer takes its stats
+from one function, ``manifest._bucket_stats``, over the written rows
+in Arrow: batch writes read each bucket's stats columns back with
+pyarrow (``_collect_stats``, no Spark job), the streaming sink and its
+compaction profile their in-memory tables. Pinned here: (1) committed
+stats equal a Spark ``groupBy(_bucket).agg(min, max)`` reference
+computed in the test, for every ``_STATS_TYPES`` class; (2) the NaN
+mis-prune guard: Spark orders NaN ABOVE every numeric
+(``double('NaN') > 5.0`` is true), so a float column holding NaN must
+carry no stats, whatever min/max a parquet writer put in its footer;
+(3) no Spark job runs for stats, INT96 timestamp files included."""
 
 from __future__ import annotations
 
-import math
+import datetime as dt
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mapreduce_cs416_spark.sources import manifest as mf
+from mapreduce_cs416_spark.testing import count_jobs
 
 
 def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _spark_stats(spark, vdir: str) -> dict:
+    """The reference the committed stats must equal: one Spark
+    aggregate per bucket over every stats-typed column, timestamps as
+    ``unix_micros``, dates ISO, NaN-bearing and all-null columns
+    dropped, ``{}`` for a bucket with nothing to profile."""
+    df = spark.read.parquet(vdir)
+    fields = [
+        f for f in df.schema.fields
+        if f.name != mf._BUCKET_COL and isinstance(f.dataType, mf._STATS_TYPES)
+    ]
+    out = {
+        leaf.split("=", 1)[1]: {}
+        for leaf in os.listdir(vdir)
+        if leaf.startswith(f"{mf._BUCKET_COL}=")
+    }
+    if not fields:
+        return out
+    aggs = []
+    for f in fields:
+        e = F.unix_micros(f.name) if isinstance(f.dataType, T.TimestampType) else F.col(f.name)
+        aggs += [F.min(e).alias(f"mn_{f.name}"), F.max(e).alias(f"mx_{f.name}")]
+        if isinstance(f.dataType, (T.FloatType, T.DoubleType)):
+            aggs.append(F.max(F.isnan(f.name).cast("int")).alias(f"nan_{f.name}"))
+    for r in df.groupBy(mf._BUCKET_COL).agg(*aggs).collect():
+        ent = out[str(r[mf._BUCKET_COL])]
+        for f in fields:
+            mn, mx = r[f"mn_{f.name}"], r[f"mx_{f.name}"]
+            if mn is None or r.asDict().get(f"nan_{f.name}"):
+                continue
+            if isinstance(f.dataType, T.DateType):
+                mn, mx = mn.isoformat(), mx.isoformat()
+            ent[f.name] = [mn, mx]
+    return out
+
+
 @pytest.fixture()
 def typed_table(spark, tmp_path):
-    """A manifest table covering every _STATS_TYPES class: int, double,
-    string, date, timestamp."""
+    """A manifest table covering every _STATS_TYPES class: byte, short,
+    int, long, float, double, string, date, timestamp."""
     path = str(tmp_path / "typed_tbl")
     df = spark.range(0, 200).select(
         F.col("id").alias("k"),
+        (F.col("id") % 100 - 50).cast("byte").alias("b"),
+        (F.col("id") * 7 - 600).cast("short").alias("sh"),
+        (F.col("id") * 1000 - 3).cast("int").alias("i"),
+        (F.col("id") * 0.1).cast("float").alias("f"),
         (F.col("id") * 1.5 - 10.0).alias("x"),
         F.concat(F.lit("val-"), F.format_string("%03d", F.col("id"))).alias("s"),
         F.date_add(F.lit("2030-01-01").cast("date"), F.col("id").cast("int")).alias("d"),
@@ -38,21 +85,14 @@ def typed_table(spark, tmp_path):
 
 
 def test_footer_stats_equal_scan_stats(spark, typed_table):
-    """The footer walk and the Spark scan must agree value-for-value
-    on every column class — the equivalence that lets the footer path
-    replace the scan without changing any pruning decision."""
+    """Committed stats equal the Spark aggregate value-for-value on
+    every column class, so pruning decisions match the row filter's
+    view of the data."""
     m = mf.read_manifest(typed_table)
     (rel,) = m["stats"].keys()
-    footer = mf._collect_stats_footers(f"{typed_table}/{rel}")
-    import os
-
-    scan = mf._collect_stats_scan(spark, os.path.join(typed_table, rel))
-    assert footer == scan
-    # and the committed manifest carries exactly these stats
-    assert m["stats"][rel] == footer
-    # every class present for every bucket
-    for ent in footer.values():
-        assert set(ent) == {"k", "x", "s", "d", "ts"}
+    assert m["stats"][rel] == _spark_stats(spark, os.path.join(typed_table, rel))
+    for ent in m["stats"][rel].values():
+        assert set(ent) == {"k", "b", "sh", "i", "f", "x", "s", "d", "ts"}
         # timestamps persist as UTC micros ints, dates as ISO strings
         assert isinstance(ent["ts"][0], int)
         assert isinstance(ent["d"][0], str)
@@ -60,10 +100,8 @@ def test_footer_stats_equal_scan_stats(spark, typed_table):
 
 def test_footer_equals_scan_without_stats_columns(spark, tmp_path):
     """A table with no _STATS_TYPES column (decimal key, array value):
-    the footer walk and the scan both give every bucket an empty entry,
-    and pruning still reads every row."""
-    import os
-
+    every bucket gets an empty entry, and pruning still reads every
+    row."""
     path = str(tmp_path / "unstat_tbl")
     df = spark.range(0, 40).select(
         F.col("id").cast("decimal(12,2)").alias("k"),
@@ -72,19 +110,20 @@ def test_footer_equals_scan_without_stats_columns(spark, tmp_path):
     mf.create_table(df, path, ["k"], n_buckets=4)
     m = mf.read_manifest(path)
     (rel,) = m["stats"].keys()
-    footer = mf._collect_stats_footers(os.path.join(path, rel))
-    scan = mf._collect_stats_scan(spark, os.path.join(path, rel))
-    assert footer == scan
-    assert footer and all(ent == {} for ent in footer.values())
-    assert m["stats"][rel] == footer
+    ent = m["stats"][rel]
+    assert ent == _spark_stats(spark, os.path.join(path, rel))
+    assert ent and all(e == {} for e in ent.values())
     assert mf.read_table(spark, path, predicate="k > 30").count() == 9
 
 
 def test_footer_stats_prune_and_reread_row_identical(spark, typed_table):
-    """Range predicates over footer stats prune directories without
+    """Range predicates over the stats prune directories without
     changing results (the read contract: prune is IO-only)."""
     full = mf.read_table(spark, typed_table)
-    for pred in ("k = 7", "x > 200.0", "s <= 'val-010'", "ts >= timestamp'2030-03-01 00:00:00'"):
+    for pred in (
+        "k = 7", "x > 200.0", "s <= 'val-010'", "f < 1.0", "sh >= 500",
+        "ts >= timestamp'2030-03-01 00:00:00'", "d < date'2030-01-05'",
+    ):
         pruned = mf.read_table(spark, typed_table, predicate=pred)
         expected = _sorted_rows(full.filter(pred))
         assert _sorted_rows(pruned) == expected, pred
@@ -113,26 +152,93 @@ def test_nan_rows_survive_range_prune(spark, tmp_path):
     assert [r["k"] for r in got] == [1]
 
 
-def test_scan_fallback_drops_nan_stats(spark, tmp_path):
-    """The Spark-scan fallback applies the same NaN guard."""
-    path = str(tmp_path / "nan_scan")
-    df = spark.createDataFrame([(1, 1.5), (2, float("nan"))], "k long, x double")
-    df = df.withColumn(mf._BUCKET_COL, F.lit(0))
-    (
-        df.write.mode("overwrite").partitionBy(mf._BUCKET_COL).parquet(f"{path}/v")
+def test_nan_detected_from_data_not_footer(spark, tmp_path):
+    """A pyarrow-written leaf holding NaN carries FINITE footer stats
+    (pyarrow skips NaN when computing them), so a footer-based NaN
+    check would persist [1.5, 2.5] and an ``x > 100.0`` prune would
+    drop the NaN row Spark's filter keeps. The stats must come from
+    the data."""
+    path = str(tmp_path / "pq_nan")
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())]
     )
-    ent = mf._collect_stats_scan(spark, f"{path}/v")
-    assert "x" not in ent["0"]
-    assert ent["0"]["k"] == [1, 2]
+    mf.create_table(
+        spark.createDataFrame([(1, 1.5), (2, 2.0), (3, 2.5)], schema),
+        path, ["k"], n_buckets=1,
+    )
+    m = mf.read_manifest(path)
+    (rel,) = m["stats"].keys()
+    leaf = os.path.join(path, rel, f"{mf._BUCKET_COL}=0")
+    for fn in os.listdir(leaf):
+        os.remove(os.path.join(leaf, fn))
+    part = os.path.join(leaf, "part-0.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2, 3], pa.int64()), "x": [1.5, float("nan"), 2.5]}),
+        part,
+    )
+    footer = pq.read_metadata(part).row_group(0).column(1).statistics
+    assert (footer.min, footer.max) == (1.5, 2.5)  # the premise
+
+    st = mf._collect_stats(path, rel, schema)
+    assert st == {"0": {"k": [1, 3]}}
+    mf._commit(path, {**m, "version": m["version"] + 1, "stats": {rel: st}})
+    # Spark's parquet filter pushdown trusts that same footer and skips
+    # the row group itself, so read with it off: what is left to drop
+    # the NaN row is the manifest's own prune
+    key = "spark.sql.parquet.filterPushdown"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = mf.read_table(spark, path, predicate="x > 100.0").collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [r["k"] for r in got] == [2]
+
+
+def test_int96_timestamp_stats_run_no_spark_job(spark, tmp_path):
+    """A session writing INT96 timestamps (pyarrow reads them back as
+    nanoseconds, with no footer stats): stats still come from the
+    data with no Spark job, equal ``unix_micros`` min/max per bucket,
+    and a timestamp range prune returns exactly the filter's rows."""
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        path = str(tmp_path / "int96_tbl")
+        df = spark.range(0, 40).select(
+            F.col("id").alias("k"),
+            F.timestamp_seconds(1_900_000_000 + F.col("id") * 3600).alias("ts"),
+        )
+        mf.create_table(df, path, ["k"], n_buckets=4)
+    finally:
+        spark.conf.set(key, old)
+    m = mf.read_manifest(path)
+    (rel,) = m["stats"].keys()
+    vdir = os.path.join(path, rel)
+    leaf = next(d for d in os.listdir(vdir) if d.startswith(f"{mf._BUCKET_COL}="))
+    fn = next(f for f in os.listdir(os.path.join(vdir, leaf)) if f.endswith(".parquet"))
+    assert pq.read_schema(os.path.join(vdir, leaf, fn)).field("ts").type == pa.timestamp("ns")
+
+    with count_jobs(spark) as jobs:
+        st = mf._collect_stats(path, rel, df.schema)
+    assert jobs.n == 0
+    assert st == m["stats"][rel] == _spark_stats(spark, vdir)
+    assert all("ts" in ent for ent in st.values())
+
+    full = mf.read_table(spark, path)
+    for pred in (
+        "ts >= timestamp'2030-03-19 00:00:00'",
+        "ts < timestamp'2030-03-17 20:00:00'",
+    ):
+        got = _sorted_rows(mf.read_table(spark, path, predicate=pred))
+        assert got == _sorted_rows(full.filter(pred)), pred
+        assert got
 
 
 def test_footer_matches_scan_on_orders_merge(spark, sf_dir, tmp_path):
     """End-to-end on the real fixture: after a create + merge, every
-    committed stats rel equals the scan baseline (both versions'
-    directories), so the pruning behavior is unchanged by the footer
-    path."""
-    import os
-
+    committed stats rel equals the Spark reference, so pruning sees
+    exactly the data's bounds."""
     from mapreduce_cs416_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
@@ -148,31 +254,76 @@ def test_footer_matches_scan_on_orders_merge(spark, sf_dir, tmp_path):
     m = mf.read_manifest(path)
     assert m["stats"]  # the merge rel (and any still-live seed rel)
     for rel, ent in m["stats"].items():
-        if not ent:
-            continue
-        assert ent == mf._collect_stats_scan(spark, os.path.join(path, rel)), rel
+        assert ent == _spark_stats(spark, os.path.join(path, rel)), rel
 
 
-def test_sink_arrow_stats_drop_nan(spark):
-    """manifest_sink's executor-side stats apply the same NaN guard."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from mapreduce_cs416_spark.sources.manifest_sink import _arrow_stats
-
+def test_bucket_stats_drop_nan_and_null():
+    """The one stats function on in-memory Arrow (the streaming sink's
+    input): NaN-bearing and all-null columns get no entry, columns
+    outside _STATS_TYPES are skipped, timestamps become UTC micros
+    from any unit, dates ISO strings."""
     schema = T.StructType(
         [
             T.StructField("k", T.LongType()),
             T.StructField("x", T.DoubleType()),
+            T.StructField("f", T.FloatType()),
+            T.StructField("n", T.StringType()),
+            T.StructField("dec", T.DecimalType(12, 2)),
+            T.StructField("d", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
         ]
     )
-    tbl = pa.table({"k": [1, 2], "x": [1.5, float("nan")]})
-    ent = _arrow_stats(tbl, schema)
-    assert "x" not in ent
-    assert ent["k"] == [1, 2]
-    clean = pa.table({"k": [1, 2], "x": [1.5, 2.5]})
-    ent = _arrow_stats(clean, schema)
-    assert ent["x"] == [1.5, 2.5]
+    utc = dt.timezone.utc
+    tbl = pa.table(
+        {
+            "k": [1, 2],
+            "x": [1.5, float("nan")],
+            "f": pa.array([0.5, None], pa.float32()),
+            "n": pa.array([None, None], pa.string()),
+            "dec": pa.array([1, 2], pa.decimal128(12, 2)),
+            "d": [dt.date(2030, 1, 2), dt.date(2030, 1, 1)],
+            "ts": pa.array(
+                [dt.datetime(2030, 1, 1, tzinfo=utc), dt.datetime(2030, 1, 1, 0, 0, 1, tzinfo=utc)],
+                pa.timestamp("ns", tz="UTC"),
+            ),
+        }
+    )
+    us = int(dt.datetime(2030, 1, 1, tzinfo=utc).timestamp()) * 1_000_000
+    assert mf._bucket_stats(tbl, schema) == {
+        "k": [1, 2],
+        "f": [0.5, 0.5],
+        "d": ["2030-01-01", "2030-01-02"],
+        "ts": [us, us + 1_000_000],
+    }
+    clean = tbl.set_column(1, "x", pa.array([1.5, 2.5]))
+    assert mf._bucket_stats(clean, schema)["x"] == [1.5, 2.5]
+
+
+def test_no_stats_columns_shape_matches_across_writers(spark, tmp_path):
+    """Batch writes, sink writes and the sink's auto-compaction give a
+    bucket with no stats column the same ``{}`` entry."""
+    from mapreduce_cs416_spark.sources.manifest_sink import ManifestStreamWriter
+
+    path = str(tmp_path / "bool_tbl")
+    schema = T.StructType(
+        [T.StructField("k", T.BooleanType()), T.StructField("v", T.BooleanType())]
+    )
+    mf.create_table(
+        spark.createDataFrame([(True, False)], schema), path, ["k"],
+        n_buckets=1, properties={"maintain.max_fragments": 2},
+    )
+    assert list(mf.read_manifest(path)["stats"].values()) == [{"0": {}}]
+    tbl = pa.table({"k": [True], "v": [True]})
+    w = ManifestStreamWriter({"path": path, "sinkId": "s", "autoMaintain": "true"}, schema)
+    msg = w.write(iter(tbl.to_batches()))
+    assert msg.stats == {"0": {}}
+    w.commit([msg], batchId=0)  # two fragments: at the threshold, no fold
+    assert mf.read_manifest(path)["stats"][msg.rel] == {"0": {}}
+    w.commit([w.write(iter(tbl.to_batches()))], batchId=1)  # three: fold
+    m = mf.read_manifest(path)
+    assert mf.history(path)[-1]["op"] == "auto_compact"
+    (rel,) = m["buckets"]["0"]
+    assert m["stats"] == {rel: {"0": {}}}
 
 
 def test_all_nan_column_keeps_directory(spark, tmp_path):
@@ -185,11 +336,3 @@ def test_all_nan_column_keeps_directory(spark, tmp_path):
     mf.create_table(df, path, ["k"], n_buckets=1)
     got = mf.read_table(spark, path, predicate="x >= 0.0").collect()
     assert sorted(r["k"] for r in got) == [1, 2]
-
-
-def test_math_isnan_guard_shape():
-    """The mn != mn NaN detector used across the stats paths is the
-    plain IEEE self-inequality — pin it so a refactor to math.isnan
-    (which raises on non-floats) keeps the same semantics."""
-    assert float("nan") != float("nan")
-    assert not math.isnan(1.5)

@@ -91,7 +91,6 @@ def render() -> str:
         "multimodal_resize": "multimodal_doc_profile",
         "inverted_index_salted": "inverted_index (same oracle; salted twin)",
         "mr_wordcount_compat": "mr_text_output (compat engine + A8 sink)",
-        "mr_wordcount_arrow": "mr_text_output (Arrow-batched compat twin)",
         "asof_join_cogroup": "asof_join_events (same oracle; cogroup twin)",
         "udaf_median": "holistic_pandas_agg (same medians; UDAF face)",
         "window_running": "window_rank (window family; rotated out r4)",
