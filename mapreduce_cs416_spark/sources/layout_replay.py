@@ -1,12 +1,15 @@
 """Pure-Python replay of manifest ``partition_expr`` bucketing over
-Arrow data — the native streaming sink's bucketing brain.
+Arrow data — the one answer to "which bucket holds this key".
 
-The native exactly-once sink (manifest_sink.py) buckets every row of
-every micro-batch INSIDE a Python DataSource worker, where there is
-no SparkSession to evaluate the table's stored partition expression.
-This module compiles the expression string into a vectorized numpy
-replay, for every layout family the manifest layer itself recommends
-(manifest.py module docstring):
+Two callers need it without a SparkSession: the native exactly-once
+sink (manifest_sink.py) buckets every row of every micro-batch
+INSIDE a Python DataSource worker, and key-equality pruning
+(``manifest._resolve_candidate_buckets``, shared by ``read_table``,
+``delete_from`` and the native source) hashes the pinned literal
+combinations as a small Arrow table. This module compiles the
+expression string into a vectorized numpy replay, for every layout
+family the manifest layer itself recommends (manifest.py module
+docstring):
 
 - ``pmod(xxhash64(k1, ..., kn), N)`` — the DEFAULT hash layout;
   replayed through :mod:`spark_hash`'s vector lanes (property-pinned
@@ -27,10 +30,11 @@ replay, for every layout family the manifest layer itself recommends
   r12 discipline), so the replay is tz-independent by construction:
   the Arrow storage value IS the lane.
 
-Anything else refuses with a loud ValueError at stream start — the
-sink must never mis-bucket a row (a wrong bucket silently corrupts
-point-read pruning), so genuinely non-replayable expressions keep
-falling back to ``foreachBatch`` + ``append_into``.
+Anything else refuses with a loud ValueError — the sink refuses at
+stream start (a wrong bucket silently corrupts point-read pruning),
+so genuinely non-replayable expressions keep falling back to
+``foreachBatch`` + ``append_into``, and point reads on such tables
+prune by stats only.
 
 VERDICT r12 item 1: this closes the "native sink is hash-layout
 only" gap — event-time changelogs with range layouts (the locality
@@ -82,12 +86,13 @@ class ReplayableLayout:
 
     def bucket_ids(self, table):
         """int64 numpy array of per-row bucket ids — vectorized for
-        every lane. String keys longer than
-        :data:`spark_hash.VECTOR_MAX_STRLEN` bytes stay vectorized
-        too (VERDICT r12 item 4): the batch processes in row slices
-        whose byte matrices each fit
+        every lane, the layout's only hash entry point (a point read's
+        literal combinations arrive as a table of a few rows). String
+        keys longer than :data:`spark_hash.VECTOR_MAX_STRLEN` bytes
+        stay vectorized too (VERDICT r12 item 4): the batch processes
+        in row slices whose byte matrices each fit
         :data:`spark_hash.LONG_KEY_SLICE_BYTES`, so URL-/path-keyed
-        tables never re-enter the per-row scalar path."""
+        tables never build one huge matrix."""
         import numpy as np
         import pyarrow as pa
 
@@ -110,31 +115,6 @@ class ReplayableLayout:
                 np.int64
             )
         return vals % np.int64(self.n)  # pmod: numpy % == floored mod
-
-    def bucket_of_row(self, values) -> int:
-        """Scalar replay for ONE key combination — the native source's
-        key-equality pruning path (manifest_source.replay_buckets),
-        where a predicate pins a handful of literals rather than a
-        whole Arrow batch. Values arrive already cast to the column's
-        lane (``manifest_source._cast_for_lane``: ints for integral
-        columns, tz-aware datetimes for timestamps)."""
-        import math
-
-        if self.kind == "hash":
-            return spark_hash.bucket_of(values, self.fields, self.n)
-        (v,) = values
-        if self.kind == "ts_floor_div":
-            if not (hasattr(v, "tzinfo") and v.tzinfo is not None):
-                raise spark_hash.UnsupportedLane(
-                    "timestamp without an explicit timezone"
-                )
-            # float64 division exactly as the JVM (and the vector
-            # lane) computes it — cast BEFORE dividing
-            return math.floor(float(spark_hash.micros_of(v)) / float(self.n))
-        v = int(v)
-        if self.kind == "floor_div":
-            return math.floor(float(v) / float(self.n))
-        return v % self.n  # pmod
 
     def _hash_ids(self, table):
         import numpy as np
@@ -196,8 +176,8 @@ def _key_fields(manifest: dict, names: list[str]) -> list:
 def compile_layout(manifest: dict) -> ReplayableLayout:
     """Compile ``manifest['partition_expr']`` into a
     :class:`ReplayableLayout`, or raise ValueError naming the refusal
-    — the caller (the native sink) must refuse at stream start, never
-    mis-bucket a row."""
+    — the native sink refuses at stream start, never mis-bucketing a
+    row; the point-read resolver prunes by stats only."""
     expr = manifest["partition_expr"]
     key_cols = list(manifest["key_cols"])
 

@@ -46,12 +46,13 @@ ONLY from reader-construction state: every planning of one relation
 yields the same partitions, and reuse is harmless by construction.
 
 Pruning without a JVM: ``partitions()`` runs in a driver-side Python
-worker with NO SparkSession, so the partition-expression replay that
-``resolve_read_dirs`` does with a tiny Spark job is done in pure
-Python — when the table uses the default ``pmod(xxhash64(keys), n)``
-layout, key-equality / IN conjuncts resolve to candidate buckets
-through :mod:`spark_hash` (property-tested against ``F.xxhash64``;
-any lane it cannot replay exactly refuses the whole prune). Custom
+worker with NO SparkSession, which is why key-equality / IN conjuncts
+resolve to candidate buckets through ``read_table``'s own JVM-free
+resolver, ``manifest._resolve_candidate_buckets``: it replays every
+layout ``layout_replay.compile_layout`` compiles (the default
+``pmod(xxhash64(keys), n)`` through :mod:`spark_hash`'s vector lanes,
+property-tested against ``F.xxhash64``, and the range families), and
+any literal it cannot replay exactly refuses the whole prune. Other
 partition expressions skip bucket replay and rely on per-directory
 min/max stats. A predicate shape the parser doesn't understand
 prunes nothing — never guesses.
@@ -66,117 +67,16 @@ streams one schema-projected, DV-filtered Arrow table per file
 
 from __future__ import annotations
 
-import itertools
 import json
-import struct
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from . import manifest as mf
-from . import spark_hash
-
-# layout grammar moved to layout_replay.py (r13): the source and the
-# sink share one compiled-replay brain for every supported family
 
 
 class BucketScan(InputPartition):
     def __init__(self, spec: dict):
         self.spec = spec
-
-
-def _cast_for_lane(value, dtype, tz: str | None = None):
-    """Mirror ``_resolve_candidate_buckets``'s literal-to-column cast
-    (Java semantics: float → integral truncates toward zero) before
-    hashing; spark_hash refuses anything it can't replay exactly.
-    Timestamp literals resolve under ``tz`` — the session timezone the
-    row filter will parse them with (passed by :func:`scan`); without
-    it the lane refuses and the prune degrades to stats-only."""
-    name = dtype.typeName()
-    if name in ("byte", "short", "integer", "long"):
-        return int(value)
-    if name in ("float", "double"):
-        return float(value)
-    if name == "timestamp":
-        if not isinstance(value, str) or tz is None:
-            raise spark_hash.UnsupportedLane(
-                "timestamp literal needs the sessionTimeZone option"
-            )
-        return spark_hash.timestamp_literal(value, tz)
-    return value
-
-
-def replay_buckets(
-    manifest: dict, conjs: list, tz: str | None = None
-) -> list[int] | None:
-    """Pure-Python twin of ``manifest._resolve_candidate_buckets``:
-    candidate bucket ids when equality/IN conjuncts pin every key
-    column the partition expression references, else None (no bucket
-    pruning). Since r13 this covers every REPLAYABLE layout family
-    (``layout_replay.compile_layout``) — the default hash layout AND
-    the range families (``floor(key / n)``, ``pmod(key, n)``,
-    ``floor(unix_micros(key) / n)``) — so key point reads on
-    range-partitioned tables prune to one bucket through the native
-    no-JVM path too, instead of degrading to stats. Same gates:
-    literal type classes must match their columns
-    (``_literal_type_ok``), ≤ ``_MAX_KEY_COMBOS`` combinations, and
-    any lane the replay cannot compute exactly refuses the whole
-    prune."""
-    from .layout_replay import compile_layout
-
-    schema = mf._schema_of(manifest)
-    if schema is None:
-        return None
-    try:
-        layout = compile_layout(manifest)
-    except (ValueError, KeyError):
-        return None  # non-replayable expression: stats-only pruning
-    ref = [f.name for f in layout.fields]
-    pinned: dict[str, list] = {}
-    for col, op, lit in conjs:
-        if op == "=":
-            pinned.setdefault(col, []).append([lit])
-        elif op == "in":
-            pinned.setdefault(col, []).append(list(lit))
-    values: dict[str, list] = {}
-    for col, lists in pinned.items():
-        vals = lists[0]
-        for other in lists[1:]:
-            vals = [v for v in vals if v in other]
-        values[col] = vals
-    if not ref or not all(c in values for c in ref):
-        return None
-    by_name = {f.name: f for f in schema.fields}
-    if any(c not in by_name for c in ref):
-        return None
-    for c in ref:
-        if not all(mf._literal_type_ok(v, by_name[c].dataType) for v in values[c]):
-            return None
-    combos = list(itertools.product(*[values[c] for c in ref]))
-    if not combos:
-        return []  # contradictory conjuncts: provably empty
-    if len(combos) > mf._MAX_KEY_COMBOS:
-        return None
-    fields = layout.fields
-    out = set()
-    try:
-        for combo in combos:
-            lanes = [_cast_for_lane(v, f.dataType, tz) for v, f in zip(combo, fields)]
-            out.add(layout.bucket_of_row(lanes))
-    except (
-        spark_hash.UnsupportedLane,
-        ValueError,
-        TypeError,
-        # an out-of-range numeric literal on an integral key
-        # ('k = 1e20' → struct.pack('<q') raises struct.error, which
-        # subclasses Exception NOT ValueError; float('inf') raises
-        # OverflowError) must degrade to no-prune like every other
-        # unreplayable literal, not error the whole scan — the JVM
-        # path degrades gracefully through Spark's cast (ADVICE r11)
-        struct.error,
-        OverflowError,
-    ):
-        return None
-    return sorted(out)
 
 
 def _projected_columns(manifest: dict, options: dict) -> list[str]:
@@ -285,7 +185,7 @@ class ManifestBatchReader(DataSourceReader):
         candidates = sorted(int(b) for b in man["buckets"])
         conjs = self._conjs
         if conjs:
-            pinned = replay_buckets(man, conjs, self._tz)
+            pinned = mf._resolve_candidate_buckets(man, conjs, self._tz)
             if pinned is not None:
                 keep = set(pinned)
                 candidates = [b for b in candidates if b in keep]

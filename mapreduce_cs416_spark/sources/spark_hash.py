@@ -2,13 +2,17 @@
 
 Why this exists: the manifest table's default layout hashes key
 columns through ``pmod(xxhash64(keys), n_buckets)`` (see
-``manifest.default_partition_expr``).  ``read_table`` replays that
-expression with a tiny Spark job to turn key-equality predicates into
-bucket pruning — but PySpark 4's Python DataSource API runs
-``pushFilters``/``partitions()`` in a driver-side Python worker with
-NO SparkSession, so the native ``spark.read.format("manifest")``
-source (manifest_source.py) cannot launch jobs during planning.  This
-module computes the same 64-bit hashes JVM-free.
+``manifest.default_partition_expr``). Two places must compute those
+buckets without a JVM: the native streaming sink
+(manifest_sink.py), which buckets every row of a micro-batch inside
+a Python DataSource worker, and key-equality pruning
+(``manifest._resolve_candidate_buckets``), which also serves the
+native ``spark.read.format("manifest")`` source — PySpark 4's Python
+DataSource API plans in a driver-side Python worker with NO
+SparkSession. Both reach this module through
+``layout_replay.ReplayableLayout.bucket_ids``, over whole numpy
+arrays: a point read's few literal combinations are just a short
+batch.
 
 xxHash64 is a public, fully specified algorithm (Yann Collet,
 github.com/Cyan4973/xxHash); Spark's ``XxHash64`` expression applies
@@ -21,20 +25,18 @@ and NULL columns leave the running hash unchanged.
 
 Correctness is pinned empirically, not by trust:
 ``tests/test_manifest_source.py`` property-tests every supported type
-against ``F.xxhash64`` on randomized values.  Timestamps hash their
+against ``F.xxhash64`` on randomized values. Timestamps hash their
 long micros-since-epoch — an absolute instant, timezone-INdependent —
 but a zoneless timestamp LITERAL must be resolved under the session
 timezone Spark's own cast would apply (:func:`timestamp_literal`;
 DST-ambiguous and nonexistent local times refuse rather than guess).
-Anything not supported here (naive datetimes with no zone, arrays,
-maps, wide decimals) makes :func:`bucket_of` raise, and the caller
-degrades to stats-only pruning; a wrong prune is never an option
-because unsupported inputs refuse loudly.
+Anything not supported here (arrays, maps, decimals) raises
+:class:`UnsupportedLane` or is refused by ``compile_layout``, and
+the caller degrades to stats-only pruning; a wrong prune is never an
+option because unsupported inputs refuse loudly.
 """
 
 from __future__ import annotations
-
-import struct
 
 _M = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -42,80 +44,6 @@ _P2 = 0xC2B2AE3D27D4EB4F
 _P3 = 0x165667B19E3779F9
 _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
-
-
-def _round(acc: int, lane: int) -> int:
-    acc = (acc + lane * _P2) & _M
-    return (_rotl(acc, 31) * _P1) & _M
-
-
-def _merge_round(h: int, v: int) -> int:
-    h ^= _round(0, v)
-    return (h * _P1 + _P4) & _M
-
-
-def _avalanche(h: int) -> int:
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h
-
-
-def xxh64(data: bytes, seed: int) -> int:
-    """Reference xxHash64 over ``data`` (unsigned 64-bit result)."""
-    seed &= _M
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M
-        v2 = (seed + _P2) & _M
-        v3 = seed
-        v4 = (seed - _P1) & _M
-        while i <= n - 32:
-            lanes = struct.unpack_from("<QQQQ", data, i)
-            v1 = _round(v1, lanes[0])
-            v2 = _round(v2, lanes[1])
-            v3 = _round(v3, lanes[2])
-            v4 = _round(v4, lanes[3])
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M
-        for v in (v1, v2, v3, v4):
-            h = _merge_round(h, v)
-    else:
-        h = (seed + _P5) & _M
-    h = (h + n) & _M
-    while i <= n - 8:
-        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
-        h = (_rotl(h, 27) * _P1 + _P4) & _M
-        i += 8
-    if i <= n - 4:
-        h ^= (struct.unpack_from("<I", data, i)[0] * _P1) & _M
-        h = (_rotl(h, 23) * _P2 + _P3) & _M
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P5) & _M
-        h = (_rotl(h, 11) * _P1) & _M
-        i += 1
-    return _avalanche(h)
-
-
-def _signed(u: int) -> int:
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def _hash_int(value: int, seed: int) -> int:
-    # Spark XXH64.hashInt == xxh64 over the 4-byte LE two's complement
-    return xxh64(struct.pack("<i", value), seed)
-
-
-def _hash_long(value: int, seed: int) -> int:
-    return xxh64(struct.pack("<q", value), seed)
 
 
 def micros_of(aware) -> int:
@@ -130,74 +58,6 @@ def micros_of(aware) -> int:
 class UnsupportedLane(ValueError):
     """Raised when a (value, Spark type) pair has no replayable lane —
     callers must treat this as 'cannot prune', never guess."""
-
-
-def hash_value(value, type_name: str, seed: int, dtype=None) -> int:
-    """One column's contribution: the new running hash given the old
-    one as ``seed``.  ``type_name`` is ``DataType.typeName()``;
-    ``dtype`` carries the full type for decimals.  NULL handling
-    (skip) is the CALLER's job — Spark skips the column entirely."""
-    import datetime
-    import decimal
-
-    if type_name == "boolean":
-        return _hash_int(1 if value else 0, seed)
-    if type_name in ("byte", "short", "integer"):
-        return _hash_int(int(value), seed)
-    if type_name == "long":
-        return _hash_long(int(value), seed)
-    if type_name == "date":
-        if isinstance(value, datetime.date) and not isinstance(value, datetime.datetime):
-            days = (value - datetime.date(1970, 1, 1)).days
-        elif isinstance(value, str):
-            d = datetime.date.fromisoformat(value.strip())
-            days = (d - datetime.date(1970, 1, 1)).days
-        else:
-            raise UnsupportedLane(f"date lane from {type(value).__name__}")
-        return _hash_int(days, seed)
-    if type_name == "float":
-        v = float(value)
-        if v == 0.0:
-            v = 0.0  # -0.0f normalizes
-        return _hash_int(struct.unpack("<i", struct.pack("<f", v))[0], seed)
-    if type_name == "double":
-        v = float(value)
-        if v == 0.0:
-            v = 0.0
-        return _hash_long(struct.unpack("<q", struct.pack("<d", v))[0], seed)
-    if type_name == "string":
-        if not isinstance(value, str):
-            raise UnsupportedLane(f"string lane from {type(value).__name__}")
-        return xxh64(value.encode("utf-8"), seed)
-    if type_name == "binary":
-        return xxh64(bytes(value), seed)
-    if type_name == "decimal":
-        if dtype is None or dtype.precision > 18:
-            # wide decimals hash their BigInteger byte array; the
-            # changelog faces never key on them — refuse, don't guess
-            raise UnsupportedLane("decimal precision > 18")
-        if isinstance(value, float):
-            # Spark rounds a double→decimal cast HALF_UP; Python's
-            # Decimal(float) carries binary noise — refuse rather
-            # than risk a one-ulp bucket mismatch
-            raise UnsupportedLane("float literal on decimal column")
-        unscaled = int(
-            (decimal.Decimal(value)).scaleb(dtype.scale).to_integral_value()
-        )
-        return _hash_long(unscaled, seed)
-    if type_name == "timestamp":
-        # a STORED timestamp is an absolute instant: its lane is the
-        # long micros-since-epoch, timezone-INdependent. What IS
-        # timezone-dependent is parsing a zoneless literal — that is
-        # the caller's job (hash_timestamp_literal resolves a literal
-        # under an explicit zone); here only unambiguous values are
-        # accepted: tz-AWARE datetimes (exact integer micros via
-        # timedelta arithmetic) — naive datetimes and bare strings
-        # refuse, never guess a zone.
-        if isinstance(value, datetime.datetime) and value.tzinfo is not None:
-            return _hash_long(micros_of(value), seed)
-        raise UnsupportedLane("timestamp without an explicit timezone")
-    raise UnsupportedLane(type_name)
 
 
 def timestamp_literal(text: str, tz_name: str):
@@ -230,33 +90,14 @@ def timestamp_literal(text: str, tz_name: str):
     return a0
 
 
-def xxhash64_row(values, fields) -> int:
-    """Spark's ``xxhash64(col1, col2, ...)`` over one row of typed
-    values: running hash seeded at 42, NULLs skipped, SIGNED 64-bit
-    result (what the SQL expression returns)."""
-    h = 42
-    for value, field in zip(values, fields):
-        if value is None:
-            continue
-        h = hash_value(value, field.dataType.typeName(), h, field.dataType)
-    return _signed(h)
-
-
-def bucket_of(values, fields, n_buckets: int) -> int:
-    """``pmod(xxhash64(keys), n) `` for one key combination — the
-    default-layout bucket id."""
-    return xxhash64_row(values, fields) % n_buckets
-
-
 # --- vectorized lanes (numpy uint64 wraparound arithmetic) -------------
 #
-# The scalar path above replays ≤64 pruning combos; the native
-# streaming SINK (manifest_sink.py) has to bucket EVERY ROW of every
-# micro-batch, where a per-row Python loop would be the classic
-# slow path. These vector twins compute the identical chained hash
-# over whole numpy arrays; null positions carry the running seed
-# through unchanged, exactly Spark's skip. Property-pinned against
-# F.xxhash64 alongside the scalar tests.
+# The native streaming SINK (manifest_sink.py) buckets EVERY ROW of
+# every micro-batch, where a per-row Python loop would be the classic
+# slow path, so the chained hash runs over whole numpy arrays; null
+# positions carry the running seed through unchanged, exactly Spark's
+# skip. Point-read pruning uses the same lanes on a short batch.
+# Property-pinned against F.xxhash64.
 
 def _v_rotl(x, r: int):
     import numpy as np
@@ -303,8 +144,7 @@ VECTOR_LANES = ("boolean", "byte", "short", "integer", "date",
 # batch would blow the allocation up — batches whose longest key fits
 # this threshold hash in ONE matrix; longer keys (URL-/path-keyed
 # tables, VERDICT r12 item 4) stay vectorized but process in row
-# slices sized to LONG_KEY_SLICE_BYTES each (layout_replay._hash_ids)
-# instead of falling back to the per-row scalar replay.
+# slices sized to LONG_KEY_SLICE_BYTES each (layout_replay._hash_ids).
 VECTOR_MAX_STRLEN = 256
 
 # Byte budget per row-slice matrix on the long-key path: with 4 KB
@@ -345,10 +185,9 @@ def utf8_matrix(arr, cap: int = VECTOR_MAX_STRLEN):
     zero-padded — the vector-friendly layout ``_v_hash_bytes`` walks.
     Null slots are zero-length placeholders (callers mask by
     validity). Returns None when any row exceeds ``cap`` — the caller
-    either slices the batch into smaller row groups with a raised cap
+    slices the batch into smaller row groups with a raised cap
     (``layout_replay._hash_ids``'s long-key path, VERDICT r12 item 4)
-    or falls back to the scalar replay, rather than allocate a
-    degenerate matrix."""
+    rather than allocate a degenerate matrix."""
     import numpy as np
     import pyarrow as pa
 
@@ -375,14 +214,14 @@ def utf8_matrix(arr, cap: int = VECTOR_MAX_STRLEN):
 
 
 def _v_hash_bytes(mat, lengths, seed):
-    """Vector twin of :func:`xxh64` over variable-length rows: ``mat``
-    is the padded byte matrix from :func:`utf8_matrix`, ``lengths``
-    the per-row byte counts, ``seed`` the per-row running hash (uint64
-    array). Every phase of the scalar algorithm (32-byte stripes,
-    8-byte chunks, one 4-byte chunk, tail bytes) runs as masked
-    whole-column ops; rows shorter than a phase's window carry their
-    state through untouched — exactly the scalar control flow,
-    property-pinned against ``F.xxhash64``."""
+    """xxHash64 over variable-length rows: ``mat`` is the padded byte
+    matrix from :func:`utf8_matrix`, ``lengths`` the per-row byte
+    counts, ``seed`` the per-row running hash (uint64 array). Every
+    phase of the algorithm (32-byte stripes, 8-byte chunks, one 4-byte
+    chunk, tail bytes) runs as masked whole-column ops; rows shorter
+    than a phase's window carry their state through untouched —
+    exactly the per-row control flow, property-pinned against
+    ``F.xxhash64``."""
     import numpy as np
 
     u = np.uint64
@@ -446,8 +285,8 @@ def _lane_arrays(values, type_name: str):
     if type_name in ("long", "timestamp"):
         # a STORED timestamp is an absolute instant — its lane is the
         # long micros-since-epoch, session-timezone-INdependent (the
-        # timezone only matters when parsing a literal, spark_hash's
-        # scalar refusal); callers pass micros int64
+        # timezone only matters when parsing a literal, see
+        # timestamp_literal); callers pass micros int64
         return values.astype(np.int64).view(np.uint64), 64
     if type_name == "float":
         f = values.astype(np.float32) + np.float32(0.0)  # -0.0 → +0.0
@@ -459,14 +298,15 @@ def _lane_arrays(values, type_name: str):
 
 
 def xxhash64_vector(columns, fields):
-    """Vector twin of :func:`xxhash64_row`: ``columns`` is a list of
+    """Spark's ``xxhash64(col1, col2, ...)`` over whole columns:
+    running hash seeded at 42, NULLs skipped. ``columns`` is a list of
     ``(values, valid)`` pairs (numpy value array — null slots may hold
     any placeholder — and a boolean validity array or None), one per
     field, all the same length. String columns pass the
     ``(byte_matrix, lengths)`` pair from :func:`utf8_matrix` as their
-    values. Returns the SIGNED int64 hash array. Types outside
-    :data:`VECTOR_LANES` + string make callers fall back to the
-    scalar path (or refuse), e.g. wide decimals."""
+    values. Returns the SIGNED int64 hash array (what the SQL
+    expression returns). A type with no lane here (a decimal, say)
+    raises :class:`UnsupportedLane`."""
     import numpy as np
 
     if not columns:

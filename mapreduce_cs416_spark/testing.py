@@ -20,6 +20,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.checkpoints import free
 from .sources.tables import TABLES
 
 
@@ -101,8 +102,12 @@ def duckdb_rows(con, sql: str) -> tuple[list[str], list[tuple]]:
 def compare_query(
     spark: SparkSession, fn, oracle: str, sf_dir: str, max_diff: int = 5
 ) -> tuple[bool, str]:
-    """Returns (ok, message). Message carries a compact diff on failure."""
-    s_cols, s_rows = spark_rows(fn(spark, sf_dir))
+    """Returns (ok, message). Message carries a compact diff on failure.
+    The query's frame is freed (``checkpoints.free``) once collected,
+    so its checkpoints do not stay pinned in a long-lived session."""
+    df = fn(spark, sf_dir)
+    s_cols, s_rows = spark_rows(df)
+    free(df)
     con = duckdb_connect(sf_dir)
     try:
         o_cols, o_rows = duckdb_rows(con, oracle)

@@ -257,8 +257,8 @@ class TestBucketPlacement:
         for k in (53, 77, 89):
             # the literal must carry the COLUMN's type (long): a bare
             # int literal hashes through the 4-byte lane and lands in
-            # a different bucket — exactly the type-exactness
-            # _resolve_candidate_buckets casts for
+            # a different bucket — the resolver casts each literal to
+            # its column's type (manifest._cast_for_lane) for this
             expr = man["partition_expr"].replace("k", f"cast({k} as bigint)")
             spark_bucket = spark.sql(f"select cast({expr} as long) b").collect()[0]["b"]
             dirs = mf.resolve_read_dirs(spark, root, f"k = {k}")

@@ -4,8 +4,11 @@ Three claims pinned here:
 
 1. ``spark_hash`` replays ``F.xxhash64`` EXACTLY — randomized
    property test across every supported lane type, including NULLs,
-   -0.0, unicode, and empty strings. A wrong hash would be a wrong
-   prune, so this is the load-bearing test of the module.
+   -0.0, unicode, and empty strings — and the key-equality resolver
+   (``manifest._resolve_candidate_buckets``) lands every literal in
+   the bucket Spark's own ``F.expr(partition_expr)`` computes. A
+   wrong hash would be a wrong prune, so this is the load-bearing
+   test of the module.
 2. ``spark.read.format("manifest")`` ≡ ``manifest.read_table`` —
    full reads, predicate-pruned reads, time travel, deletion
    vectors, and schema-evolution boundaries.
@@ -19,9 +22,14 @@ Three claims pinned here:
 from __future__ import annotations
 
 import datetime
+import functools
+import itertools
+import json
 import random
 
+import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,13 +38,67 @@ from mapreduce_cs416_spark.sources import spark_hash
 from mapreduce_cs416_spark.sources import manifest_source as msrc
 from mapreduce_cs416_spark.sources.manifest_source import (
     ManifestBatchReader,
-    replay_buckets,
     scan,
 )
+from mapreduce_cs416_spark.testing import count_jobs
 
 
 def _rows_sorted(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _vector_hashes(rows, fields):
+    """``spark_hash.xxhash64_vector`` over Python rows: one Arrow
+    array per field, nulls passed as the validity mask."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cols = []
+    for i, f in enumerate(fields):
+        arr = pa.array([r[i] for r in rows], to_arrow_type(f.dataType))
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+        t = f.dataType.typeName()
+        if t == "string":
+            cols.append((spark_hash.utf8_matrix(arr), valid))
+            continue
+        if t == "date":
+            arr = arr.cast(pa.int32())
+        fill = pa.scalar(False if t == "boolean" else 0, arr.type)
+        cols.append((arr.fill_null(fill).to_numpy(zero_copy_only=False), valid))
+    return spark_hash.xxhash64_vector(cols, fields).tolist()
+
+
+def _manifest(expr, fields, key_cols=None):
+    """A manifest dict carrying just the layout the resolver reads."""
+    return {
+        "partition_expr": expr,
+        "key_cols": key_cols or [f.name for f in fields],
+        "columns": [f.name for f in fields],
+        "schema": json.dumps(T.StructType(fields).jsonValue()),
+    }
+
+
+def _spark_buckets(spark, manifest, conjs):
+    """The bucket set Spark itself computes: ``F.expr(partition_expr)``
+    over every combination of the conjuncts' pinned literals, each
+    cast to its column's type (timestamps under the session zone)."""
+    dtypes = {f.name: f.dataType for f in mf._schema_of(manifest).fields}
+    pinned = {c: (lit if op == "in" else [lit]) for c, op, lit in conjs}
+    rows = [
+        spark.range(1).select(
+            *[F.lit(v).cast(dtypes[c]).alias(c) for c, v in zip(pinned, combo)]
+        )
+        for combo in itertools.product(*pinned.values())
+    ]
+    df = functools.reduce(DataFrame.unionByName, rows)
+    return sorted(
+        {
+            r["b"]
+            for r in df.select(
+                F.expr(manifest["partition_expr"]).cast("long").alias("b")
+            ).collect()
+        }
+    )
 
 
 @pytest.fixture(scope="module")
@@ -82,8 +144,7 @@ class TestSparkHashReplay:
         ]
         df = spark.createDataFrame(rows, schema)
         got = df.select(F.xxhash64(*[f.name for f in schema.fields]).alias("h")).collect()
-        for row, g in zip(rows, got):
-            assert spark_hash.xxhash64_row(row, schema.fields) == g["h"], row
+        assert _vector_hashes(rows, schema.fields) == [g["h"] for g in got]
 
     def test_long_strings_cross_stripe_boundaries(self, spark):
         # 32-byte stripes + 8/4/1-byte tails all exercised
@@ -91,29 +152,39 @@ class TestSparkHashReplay:
         rows = [("q" * n,) for n in range(0, 130)]
         df = spark.createDataFrame(rows, schema)
         got = df.select(F.xxhash64("s").alias("h")).collect()
-        for row, g in zip(rows, got):
-            assert spark_hash.xxhash64_row(row, schema.fields) == g["h"], len(row[0])
+        assert _vector_hashes(rows, schema.fields) == [g["h"] for g in got]
 
     def test_bucket_replay_matches_spark_partition_expr(self, spark):
-        # composite (long, string) key: the replay must land every key
-        # in the bucket Spark's own expression computes
+        # composite (long, string) key: the resolver must land every
+        # key in the bucket Spark's own expression computes
         fields = [
             T.StructField("k", T.LongType()),
             T.StructField("s", T.StringType()),
         ]
+        man = _manifest("pmod(xxhash64(k, s), 16)", fields)
         rng = random.Random(11)
         keys = [(rng.randint(-(2**40), 2**40), f"id_{rng.randint(0, 10**6)}") for _ in range(200)]
         df = spark.createDataFrame(keys, T.StructType(fields))
         exp = df.select(F.expr("pmod(xxhash64(k, s), 16)").cast("long").alias("b")).collect()
-        for key, e in zip(keys, exp):
-            assert spark_hash.bucket_of(list(key), fields, 16) == e["b"], key
+        for (k, s), e in zip(keys, exp):
+            got = mf._resolve_candidate_buckets(man, [("k", "=", k), ("s", "=", s)])
+            assert got == [e["b"]], (k, s)
 
     def test_unsupported_lane_refuses(self):
-        # a NAIVE datetime has no zone — refusing beats guessing
+        # a zoneless timestamp literal with no session zone — refusing
+        # beats guessing
         with pytest.raises(spark_hash.UnsupportedLane):
-            spark_hash.hash_value(datetime.datetime(2020, 1, 1), "timestamp", 42)
+            mf._cast_for_lane("2020-01-01 00:00:00", T.TimestampType())
+        ts = _manifest("pmod(xxhash64(ts), 8)", [T.StructField("ts", T.TimestampType())])
+        assert mf._resolve_candidate_buckets(ts, [("ts", "=", "2020-01-01 00:00:00")]) is None
+        # decimals have no vector lane: the hash refuses, and a decimal
+        # key's layout is not replayable, so its point reads do not prune
+        dec = T.StructField("k", T.DecimalType(10, 2))
         with pytest.raises(spark_hash.UnsupportedLane):
-            spark_hash.hash_value(1.5, "decimal", 42, T.DecimalType(10, 2))
+            spark_hash.xxhash64_vector([(np.zeros(1), None)], [dec])
+        man = _manifest("pmod(xxhash64(k), 8)", [dec])
+        assert mf._resolve_candidate_buckets(man, [("k", "=", 1)]) is None
+        assert mf._resolve_candidate_buckets(man, [("k", "=", 1.5)]) is None
 
     def test_vectorized_string_lane_matches_scalar_and_spark(self, spark):
         # VERDICT r11 item 2: the offset-padded byte-matrix lane must
@@ -318,15 +389,19 @@ class TestTimestampLane:
                         f"xxhash64(timestamp'{l}') as h{i}" for i, l in enumerate(lits)
                     )
                 ).collect()[0]
+                micros, exp = [], []
                 for i, l in enumerate(lits):
                     try:
                         aware = spark_hash.timestamp_literal(l, tz)
                     except spark_hash.UnsupportedLane:
                         continue  # DST-ambiguous pick: refusal is the contract
-                    got = spark_hash._signed(
-                        spark_hash.hash_value(aware, "timestamp", 42)
-                    )
-                    assert got == row[f"h{i}"], (tz, l)
+                    micros.append(spark_hash.micros_of(aware))
+                    exp.append(row[f"h{i}"])
+                got = spark_hash.xxhash64_vector(
+                    [(np.array(micros, np.int64), None)],
+                    [T.StructField("ts", T.TimestampType())],
+                )
+                assert got.tolist() == exp, tz
         finally:
             spark.conf.set("spark.sql.session.timeZone", orig)
 
@@ -354,7 +429,7 @@ class TestTimestampLane:
         # WITHOUT it: refuse the replay (never guess a zone) → all buckets
         rdr2 = ManifestBatchReader({"path": root, "predicate": f"ts = '{lit}'"})
         assert len(rdr2.partitions()) == 8
-        # the JVM path (read_table) prunes too, via Spark's own cast
+        # read_table prunes too, under the session's own timezone
         dirs = mf.resolve_read_dirs(spark, root, f"ts = '{lit}'")
         assert len(dirs) == 1
         assert mf.read_table(spark, root, predicate=f"ts = '{lit}'").count() == 1
@@ -533,24 +608,86 @@ class TestPruningPinned:
         assert 1 <= len(rdr.partitions()) <= 3
 
     def test_replay_matches_jvm_resolution(self, spark, table):
-        man = mf.read_manifest(table)
-        for pred in ["k = 123", "k in (3, 500, 999)", "k = 5 or k = 9"]:
-            conjs = mf._conjuncts(pred)
-            assert replay_buckets(man, conjs) == mf._resolve_candidate_buckets(
-                spark, man, conjs
-            ), pred
+        # the resolver against Spark evaluating the partition
+        # expression over the cast literals: all four layout families,
+        # every key type point reads pin, a two-column hash and IN-lists
+        def f(name, dtype):
+            return T.StructField(name, dtype)
+
+        cases = [
+            (mf.read_manifest(table), ["k = 123", "k in (3, 500, 999)", "k = 5 or k = 9"]),
+            (_manifest("pmod(xxhash64(k), 8)", [f("k", T.LongType())]),
+             ["k = -1", "k in (0, 9223372036854775807, -9223372036854775808)",
+              "k = 7.9", "k in (5, 6) and k = 6"]),
+            (_manifest("pmod(xxhash64(k), 8)", [f("k", T.IntegerType())]),
+             ["k in (-2147483648, 2147483647, 0, -7)"]),
+            (_manifest("pmod(xxhash64(k), 8)", [f("k", T.ShortType())]),
+             ["k in (-32768, 32767, 1, -1)"]),
+            (_manifest("pmod(xxhash64(s), 8)", [f("s", T.StringType())]),
+             ["s in ('', 'é漢字', 'a''b', 'doc_17')", "s = ''"]),
+            (_manifest("pmod(xxhash64(d), 8)", [f("d", T.DateType())]),
+             ["d in ('1899-12-31', '1970-01-01', '2026-08-16')",
+              "d = '2020-01-05 10:00:00'"]),
+            (_manifest("pmod(xxhash64(x), 8)", [f("x", T.DoubleType())]),
+             ["x in (0.0, -0.0, 1.5, -3.25e300)", "x = 3"]),
+            (_manifest("pmod(xxhash64(x), 8)", [f("x", T.FloatType())]),
+             ["x in (-0.0, 0.0, 2.5, 1.1, -1.25e30)"]),
+            (_manifest("pmod(xxhash64(k, s), 16)", [f("k", T.LongType()), f("s", T.StringType())]),
+             ["k in (1, 2, 3) and s in ('a', 'é', '')", "s = 'x' and k = 5"]),
+            (_manifest("floor(k / 128)", [f("k", T.LongType())]),
+             ["k in (5, 900, -1, -129)"]),
+            (_manifest("floor(k / 7)", [f("k", T.IntegerType())]),
+             ["k in (-2147483648, 2147483647, -7, 7)"]),
+            (_manifest("pmod(k, 8)", [f("k", T.LongType())]),
+             ["k in (-9, -1, 0, 17)"]),
+        ]
+        for man, preds in cases:
+            for pred in preds:
+                conjs = mf._conjuncts(pred)
+                got = mf._resolve_candidate_buckets(man, conjs)
+                assert got == _spark_buckets(spark, man, conjs), pred
+        # timestamp literals resolve under the session zone, per zone
+        ts = f("ts", T.TimestampType())
+        lits = "('1969-07-20 20:17:40', '2024-03-10 12:00:00', '2030-12-31 23:59:59.5')"
+        orig = spark.conf.get("spark.sql.session.timeZone")
+        try:
+            for tz in TestTimestampLane.TZS:
+                spark.conf.set("spark.sql.session.timeZone", tz)
+                for man in (
+                    _manifest("pmod(xxhash64(ts), 8)", [ts]),
+                    _manifest("floor(unix_micros(ts) / 86400000000)", [ts]),
+                    _manifest("pmod(xxhash64(k, ts), 16)", [f("k", T.LongType()), ts]),
+                ):
+                    pred = f"ts in {lits}" + (" and k in (1, 2)" if "k" in man["key_cols"] else "")
+                    conjs = mf._conjuncts(pred)
+                    got = mf._resolve_candidate_buckets(man, conjs, tz)
+                    assert got == _spark_buckets(spark, man, conjs), (tz, pred)
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", orig)
 
     def test_out_of_range_literal_degrades_to_no_prune(self, spark, table):
-        # ADVICE r11 (low): 'k = 1e20' → int(1e20) → struct.error
-        # (subclasses Exception, NOT ValueError) escaped replay_buckets'
-        # handler and FAILED the whole scan; float('inf') raised
-        # OverflowError. Both must degrade like any unreplayable
-        # literal — the JVM path degrades through Spark's cast.
+        # ADVICE r11 (low): 'k = 1e20' has no long lane (the Arrow
+        # cast raises OverflowError) and float('inf') none at all
+        # (int() raises OverflowError). Both must degrade like any
+        # unreplayable literal instead of failing the scan.
         man = mf.read_manifest(table)
-        assert msrc.replay_buckets(man, [("k", "=", 1e20)]) is None
-        assert msrc.replay_buckets(man, [("k", "=", float("inf"))]) is None
+        assert mf._resolve_candidate_buckets(man, [("k", "=", 1e20)]) is None
+        assert mf._resolve_candidate_buckets(man, [("k", "=", float("inf"))]) is None
         # end-to-end: the scan plans and returns the filter's answer (0)
         assert msrc.scan(spark, table, predicate="k = 1e20").count() == 0
+        assert mf.read_table(spark, table, predicate="k = 1e20").count() == 0
+
+    def test_point_reads_plan_with_no_spark_job(self, spark, table):
+        # key-equality pruning replays the layout in Python: planning a
+        # point read or a keyed delete submits no Spark job
+        mf.read_table(spark, table, predicate="k = 5").count()  # warm
+        man = mf.read_manifest(table)
+        with count_jobs(spark) as jobs:
+            one = mf.resolve_read_dirs(spark, table, "k = 5")
+            three = mf.resolve_read_dirs(spark, table, "k in (3, 500, 999)")
+            targets = mf._delete_targets(spark, table, man, "k = 123")
+        assert jobs.n == 0
+        assert len(one) == 1 and 1 <= len(three) <= 3 and len(targets) == 1
 
     def test_schema_and_reader_pin_one_snapshot(self, spark, tmp_path):
         # ADVICE r11 (low): schema() and reader() each resolved the
@@ -610,8 +747,8 @@ class TestPruningPinned:
         )
         mf.create_table(df, root, ["k"], partition_expr="floor(k / 128)")
         man = mf.read_manifest(root)
-        assert replay_buckets(man, mf._conjuncts("k = 5")) == [0]
-        assert replay_buckets(man, mf._conjuncts("k in (5, 900)")) == [0, 7]
+        assert mf._resolve_candidate_buckets(man, mf._conjuncts("k = 5")) == [0]
+        assert mf._resolve_candidate_buckets(man, mf._conjuncts("k in (5, 900)")) == [0, 7]
         rdr = ManifestBatchReader({"path": root, "predicate": "k = 900"})
         assert len(rdr.partitions()) == 1
         assert _rows_sorted(scan(spark, root, predicate="k = 900")) == _rows_sorted(
@@ -626,15 +763,15 @@ class TestPruningPinned:
         )
 
     def test_non_replayable_expr_falls_back_to_stats(self, spark, tmp_path):
-        # a genuinely non-replayable expression: bucket replay refuses,
-        # stats still prune, results stay exact
+        # a genuinely non-replayable expression: bucket replay refuses
+        # (in read_table too), stats still prune, results stay exact
         root = str(tmp_path / "custom_tbl")
         df = spark.range(0, 1000).select(
             F.col("id").alias("k"), (F.col("id") * 2).alias("v")
         )
         mf.create_table(df, root, ["k"], partition_expr="pmod(k * 7, 8)")
         man = mf.read_manifest(root)
-        assert replay_buckets(man, mf._conjuncts("k = 5")) is None
+        assert mf._resolve_candidate_buckets(man, mf._conjuncts("k = 5")) is None
         assert _rows_sorted(scan(spark, root, predicate="k = 5")) == _rows_sorted(
             mf.read_table(spark, root, predicate="k = 5")
         )

@@ -336,3 +336,43 @@ def test_all_nan_column_keeps_directory(spark, tmp_path):
     mf.create_table(df, path, ["k"], n_buckets=1)
     got = mf.read_table(spark, path, predicate="x >= 0.0").collect()
     assert sorted(r["k"] for r in got) == [1, 2]
+
+
+def test_sink_nan_rows_survive_parquet_pushdown(spark, tmp_path):
+    """Files the sink and its auto-compaction write carry no footer
+    statistics for float columns: pyarrow's footer min/max skip NaN,
+    and Spark's parquet filter pushdown (on here) would trust them and
+    drop the NaN row the filter keeps. Other columns keep theirs."""
+    from mapreduce_cs416_spark.sources.manifest_sink import ManifestStreamWriter
+
+    path = str(tmp_path / "sink_nan")
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())]
+    )
+    mf.create_table(
+        spark.createDataFrame([(0, 0.5)], schema), path, ["k"],
+        n_buckets=1, properties={"maintain.max_fragments": 2},
+    )
+    batch = pa.table(
+        {"k": pa.array([1, 2, 3], pa.int64()), "x": [1.5, float("nan"), 2.5]}
+    )
+    w = ManifestStreamWriter({"path": path, "sinkId": "s", "autoMaintain": "true"}, schema)
+    key = "spark.sql.parquet.filterPushdown"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        msg = w.write(iter(batch.to_batches()))
+        w.commit([msg], batchId=0)
+        got = mf.read_table(spark, path, predicate="x > 100.0").collect()
+        assert [r["k"] for r in got] == [2]
+        leaf = os.path.join(path, msg.rel, f"{mf._BUCKET_COL}=0")
+        (fn,) = os.listdir(leaf)
+        rg = pq.read_metadata(os.path.join(leaf, fn)).row_group(0)
+        assert rg.column(0).statistics.has_min_max
+        assert rg.column(1).statistics is None
+        w.commit([w.write(iter(batch.to_batches()))], batchId=1)  # fold
+        assert mf.history(path)[-1]["op"] == "auto_compact"
+        got = mf.read_table(spark, path, predicate="x > 100.0").collect()
+        assert [r["k"] for r in got] == [2, 2]
+    finally:
+        spark.conf.set(key, old)

@@ -38,3 +38,15 @@ def test_rows_only_query_runs(spark, sf_dir, name):
     df = ALL_QUERIES[name].fn(spark, sf_dir)
     assert df.columns, name
     assert df.count() >= 0
+
+
+def test_compare_query_frees_the_result(spark, sf_dir):
+    """compare_query releases the checkpoints of the frame it built:
+    graph_pagerank_fixed's result reads a checkpoint that otherwise
+    stays pinned after the rows are collected."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    spec = QUERIES["graph_pagerank_fixed"]
+    ok, msg = compare_query(spark, spec.fn, spec.oracle, sf_dir)
+    assert ok, msg
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
