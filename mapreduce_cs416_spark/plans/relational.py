@@ -1741,8 +1741,11 @@ def manifest_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     logically, so the hash row claims the whole native read path —
     pure-Python bucket replay, stats pruning, per-file Arrow
     projection, DV anti-filter — is row-identical to SQL semantics.
-    Partition/dir counts and relation-reuse safety are pinned in
-    tests/test_manifest_source.py (filter-pushdown-based pruning is
+    The surviving buckets pack by bytes into input partitions
+    (Spark's ``FilePartition`` rule), so this small read is one task
+    that drops the tombstones of every bucket it scans. The scanned
+    bucket/dir sets, the packing and relation-reuse safety are pinned
+    in tests/test_manifest_source.py (filter-pushdown-based pruning is
     structurally unsafe on Spark 4.1 — see the module docstring's
     readInfo-cache analysis — so pruning derives from the reader's
     own predicate option)."""

@@ -2022,7 +2022,9 @@ def _delete_targets(
             r
             for r in manifest["buckets"][str(b)]
             if not conjs
-            or _stats_keep(all_stats.get(r, {}).get(str(b), {}), conjs, dtypes)
+            or _stats_keep(
+                all_stats.get(r, {}).get(str(b), {}), conjs, dtypes, session_tz
+            )
         ]
         if rels_in:
             touched[b] = rels_in

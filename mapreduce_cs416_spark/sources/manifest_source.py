@@ -60,23 +60,77 @@ prunes nothing — never guesses.
 Snapshot isolation: the manifest version is resolved ONCE at reader
 construction — schema, directory set, stats, and deletion vectors
 all come from that snapshot even if a writer commits mid-query.
-Parallelism = one input partition per surviving bucket; ``read``
-streams one schema-projected, DV-filtered Arrow table per file
-(bucket_io.py — shared with the streaming CDF source).
+
+Parallelism follows Spark's file-source packing rule (``FilePartition``)
+instead of one input partition per bucket: the surviving buckets are
+weighed by the on-disk bytes of their kept ``.parquet`` files and
+packed, whole, into ``min(#buckets, ceil(total / split))`` partitions
+with ``split = min(128 MiB, max(4 MiB, total / P))`` — Spark's
+``maxPartitionBytes`` and ``openCostInBytes`` defaults — largest
+bucket first into the lightest partition (:func:`_pack`). Every
+partition is a Python task, a round trip the scan pays whatever the
+bucket holds, so a small table reads in one task and a large one
+spreads over P. ``P`` is :func:`session.default_parallelism`, the
+core count the session factory gives ``local[n]``: ``partitions()``
+runs in a Python worker with no SparkSession, so it cannot ask Spark.
+``read`` streams one schema-projected, DV-filtered Arrow table per
+file (bucket_io.py — shared with the streaming CDF source), so memory
+stays bounded by one file however many buckets a partition packs.
 """
 
 from __future__ import annotations
 
+import heapq
 import json
+import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ..session import default_parallelism
 from . import manifest as mf
+
+# Spark's spark.sql.files.maxPartitionBytes / openCostInBytes defaults
+_MAX_PARTITION_BYTES = 128 * 1024 * 1024
+_OPEN_COST_BYTES = 4 * 1024 * 1024
 
 
 class BucketScan(InputPartition):
     def __init__(self, spec: dict):
         self.spec = spec
+
+
+def _pack(sizes: dict[int, int], parallelism: int) -> list[list[int]]:
+    """Bin-pack buckets (bucket → bytes) into input partitions by
+    Spark's ``FilePartition`` split size, ``min(128 MiB, max(4 MiB,
+    total / parallelism))``: ``min(#buckets, ceil(total / split))``
+    groups, filled largest bucket first into the lightest group, so
+    the heaviest group exceeds the lightest by at most the largest
+    bucket. A bucket is never split; each group lists its buckets in
+    order, and ties break on the bucket id, so the result is
+    deterministic."""
+    if not sizes:
+        return []
+    total = sum(sizes.values())
+    # integer ceilings: total / ceil(total / P) never rounds up past P
+    split = min(_MAX_PARTITION_BYTES, max(_OPEN_COST_BYTES, -(-total // parallelism)))
+    n = min(len(sizes), max(1, -(-total // split)))
+    lightest = [(0, i) for i in range(n)]
+    groups: list[list[int]] = [[] for _ in range(n)]
+    for b in sorted(sizes, key=lambda b: (-sizes[b], b)):
+        load, i = heapq.heappop(lightest)
+        groups[i].append(b)
+        heapq.heappush(lightest, (load + sizes[b], i))
+    return [sorted(g) for g in groups]
+
+
+def _parquet_bytes(d: str) -> int:
+    if not os.path.isdir(d):
+        return 0
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    )
 
 
 def _projected_columns(manifest: dict, options: dict) -> list[str]:
@@ -192,7 +246,7 @@ class ManifestBatchReader(DataSourceReader):
         schema = mf._schema_of(man)
         dtypes = {f.name: f.dataType for f in schema.fields} if schema else {}
         all_stats = man.get("stats", {})
-        parts = []
+        kept: dict[int, list[str]] = {}
         for b in candidates:
             dirs = []
             for rel in man["buckets"].get(str(b), []):
@@ -202,33 +256,25 @@ class ManifestBatchReader(DataSourceReader):
                         f"{self.path.rstrip('/')}/{rel}/{mf._BUCKET_COL}={b}"
                     )
             if dirs:
-                parts.append(
-                    BucketScan(
-                        {
-                            "table_path": self.path,
-                            "schema_json": man["schema"],
-                            "columns": self._columns,
-                            "dirs": dirs,
-                            "dvs": mf._dv_dirs(self.path, man, [b]),
-                        }
-                    )
-                )
-        if not parts:
-            # everything pruned (or the table is empty): Spark calls
-            # read(None) when partitions() is empty, so hand it one
-            # partition that yields nothing instead
-            parts.append(
-                BucketScan(
-                    {
-                        "table_path": self.path,
-                        "schema_json": man["schema"],
-                        "columns": self._columns,
-                        "dirs": [],
-                        "dvs": [],
-                    }
-                )
+                kept[b] = dirs
+        sizes = {b: sum(map(_parquet_bytes, dirs)) for b, dirs in kept.items()}
+        # everything pruned (or the table is empty): Spark calls
+        # read(None) when partitions() is empty, so hand it one
+        # partition that yields nothing instead
+        groups = _pack(sizes, default_parallelism()) or [[]]
+        return [
+            BucketScan(
+                {
+                    "table_path": self.path,
+                    "schema_json": man["schema"],
+                    "columns": self._columns,
+                    "dirs": [d for b in group for d in kept[b]],
+                    # tombstones are keyed per file: a union is exact
+                    "dvs": mf._dv_dirs(self.path, man, group),
+                }
             )
-        return parts
+            for group in groups
+        ]
 
     def read(self, partition: BucketScan):
         from pyspark.sql.pandas.types import to_arrow_schema

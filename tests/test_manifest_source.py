@@ -12,11 +12,14 @@ Three claims pinned here:
 2. ``spark.read.format("manifest")`` ≡ ``manifest.read_table`` —
    full reads, predicate-pruned reads, time travel, deletion
    vectors, and schema-evolution boundaries.
-3. Pruning is REAL (partition/dir counts pinned, matching
-   ``resolve_read_dirs``) and SAFE under relation reuse — the
+3. Pruning is REAL (the scanned bucket and directory sets are pinned,
+   matching ``resolve_read_dirs``) and SAFE under relation reuse — the
    documented Spark 4.1 ``readInfo`` cache hazard that rules out
    pushFilters-based pruning (module docstring) cannot bite because
    partitions derive only from reader-construction state.
+4. The surviving buckets pack, whole, into size-balanced input
+   partitions (``_pack``, Spark's ``FilePartition`` rule), so a small
+   table reads in one task with every bucket's tombstones applied.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import datetime
 import functools
 import itertools
 import json
+import math
 import random
 
 import numpy as np
@@ -45,6 +49,16 @@ from mapreduce_cs416_spark.testing import count_jobs
 
 def _rows_sorted(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _scanned_buckets(rdr) -> set[int]:
+    """Bucket ids of every directory the reader's partitions scan —
+    the pruning measure, whatever the buckets pack into."""
+    return {
+        int(d.rsplit(f"{mf._BUCKET_COL}=", 1)[1])
+        for part in rdr.partitions()
+        for d in part.spec["dirs"]
+    }
 
 
 def _vector_hashes(rows, fields):
@@ -424,11 +438,11 @@ class TestTimestampLane:
         rdr = ManifestBatchReader(
             {"path": root, "predicate": f"ts = '{lit}'", "sessiontimezone": tz}
         )
-        assert len(rdr.partitions()) == 1
+        assert len(_scanned_buckets(rdr)) == 1
         assert scan(spark, root, predicate=f"ts = '{lit}'").count() == 1
         # WITHOUT it: refuse the replay (never guess a zone) → all buckets
         rdr2 = ManifestBatchReader({"path": root, "predicate": f"ts = '{lit}'"})
-        assert len(rdr2.partitions()) == 8
+        assert len(_scanned_buckets(rdr2)) == 8
         # read_table prunes too, under the session's own timezone
         dirs = mf.resolve_read_dirs(spark, root, f"ts = '{lit}'")
         assert len(dirs) == 1
@@ -543,7 +557,7 @@ class TestColumnPruning:
         rdr = ManifestBatchReader(
             {"path": table, "predicate": "k = 123", "columns": "name,k"}
         )
-        assert len(rdr.partitions()) == 1  # bucket pruning still on
+        assert len(_scanned_buckets(rdr)) == 1  # bucket pruning still on
 
     def test_unparseable_conjunct_still_widens_the_read(self, spark, table):
         # ADVICE r13 (low): a predicate the conservative parser
@@ -605,7 +619,7 @@ class TestPruningPinned:
 
     def test_in_list_reads_at_most_k_buckets(self, table):
         rdr = ManifestBatchReader({"path": table, "predicate": "k in (3, 500, 999)"})
-        assert 1 <= len(rdr.partitions()) <= 3
+        assert 1 <= len(_scanned_buckets(rdr)) <= 3
 
     def test_replay_matches_jvm_resolution(self, spark, table):
         # the resolver against Spark evaluating the partition
@@ -735,7 +749,9 @@ class TestPruningPinned:
         man = mf.read_manifest(table)
         full = ManifestBatchReader({"path": table})
         rdr = ManifestBatchReader({"path": table, "predicate": "not (k = 5)"})
-        assert len(rdr.partitions()) == len(full.partitions()) == len(man["buckets"])
+        assert _scanned_buckets(rdr) == _scanned_buckets(full) == {
+            int(b) for b in man["buckets"]
+        }
 
     def test_range_layout_point_read_prunes_to_one_bucket(self, spark, tmp_path):
         # r13: the range families bucket-replay through layout_replay
@@ -750,14 +766,14 @@ class TestPruningPinned:
         assert mf._resolve_candidate_buckets(man, mf._conjuncts("k = 5")) == [0]
         assert mf._resolve_candidate_buckets(man, mf._conjuncts("k in (5, 900)")) == [0, 7]
         rdr = ManifestBatchReader({"path": root, "predicate": "k = 900"})
-        assert len(rdr.partitions()) == 1
+        assert len(_scanned_buckets(rdr)) == 1
         assert _rows_sorted(scan(spark, root, predicate="k = 900")) == _rows_sorted(
             mf.read_table(spark, root, predicate="k = 900")
         )
         # range predicates still prune through per-bucket min/max stats
         rdr = ManifestBatchReader({"path": root, "predicate": "k >= 900"})
         full = ManifestBatchReader({"path": root})
-        assert len(rdr.partitions()) < len(full.partitions())
+        assert len(_scanned_buckets(rdr)) < len(_scanned_buckets(full))
         assert _rows_sorted(scan(spark, root, predicate="k >= 900")) == _rows_sorted(
             mf.read_table(spark, root, predicate="k >= 900")
         )
@@ -780,6 +796,89 @@ class TestPruningPinned:
         df = scan(spark, table, predicate="k = -1")
         assert df.count() == 0
         assert df.schema == mf.read_table(spark, table).schema
+
+
+_MIB = 1 << 20
+
+
+class TestPartitionPacking:
+    """``_pack``: Spark's ``FilePartition`` split size over whole
+    buckets, largest first into the lightest group."""
+
+    @staticmethod
+    def _check(sizes, groups):
+        # every bucket exactly once, never split; groups list in order
+        flat = [b for g in groups for b in g]
+        assert sorted(flat) == sorted(sizes)
+        assert all(g == sorted(g) and g for g in groups)
+        assert len(groups) <= len(sizes)
+
+    def test_tiny_total_is_one_group(self):
+        sizes = {b: 3000 + b for b in range(16)}
+        groups = msrc._pack(sizes, 8)
+        assert groups == [list(range(16))]
+
+    @pytest.mark.parametrize("p,seed", [(2, 0), (4, 1), (8, 2), (32, 3)])
+    def test_total_of_p_open_costs_gives_p_balanced_groups(self, p, seed):
+        rng = random.Random(seed)
+        sizes = {b: rng.randrange(_MIB // 2, 3 * _MIB) for b in range(5 * p)}
+        sizes[0] = max(sizes[0], 4 * p * _MIB - sum(sizes.values()) + sizes[0])
+        assert sum(sizes.values()) >= p * 4 * _MIB
+        groups = msrc._pack(sizes, p)
+        self._check(sizes, groups)
+        assert len(groups) == p
+        loads = [sum(sizes[b] for b in g) for g in groups]
+        assert max(loads) <= min(loads) + max(sizes.values())
+
+    def test_exactly_p_open_costs_gives_p_groups(self):
+        sizes = {b: 4 * _MIB for b in range(8)}
+        assert msrc._pack(sizes, 4) == [[0, 4], [1, 5], [2, 6], [3, 7]]
+
+    def test_total_above_p_max_partitions_gives_more_than_p_groups(self):
+        sizes = {b: 100 * _MIB + b for b in range(10)}
+        groups = msrc._pack(sizes, 2)
+        self._check(sizes, groups)
+        assert len(groups) == math.ceil(sum(sizes.values()) / (128 * _MIB)) > 2
+
+    def test_never_more_groups_than_buckets(self):
+        sizes = {3: 1 << 30, 7: 1 << 30, 9: 5}
+        groups = msrc._pack(sizes, 8)
+        self._check(sizes, groups)
+        assert sorted(groups) == [[3], [7], [9]]
+
+    def test_deterministic_whatever_the_input_order(self):
+        rng = random.Random(7)
+        sizes = {b: rng.choice([_MIB, 2 * _MIB, 5 * _MIB]) for b in range(40)}
+        first = msrc._pack(sizes, 6)
+        self._check(sizes, first)
+        assert msrc._pack(dict(reversed(list(sizes.items()))), 6) == first
+        assert msrc._pack(sizes, 6) == first
+
+    def test_empty_and_zero_byte_inputs(self):
+        assert msrc._pack({}, 8) == []
+        assert msrc._pack({0: 0, 1: 0}, 8) == [[0, 1]]
+
+    def test_small_table_scans_in_one_task_with_every_buckets_dvs(
+        self, spark, sf_dir, tmp_path
+    ):
+        from mapreduce_cs416_spark.sources.tables import load_table
+
+        root = str(tmp_path / "orders_packed")
+        mf.create_table(load_table(spark, sf_dir, "orders"), root, ["o_orderkey"])
+        mf.delete_from(spark, root, "o_orderkey % 10 = 0", mode="dv")
+        man = mf.read_manifest(root)
+        assert len(man["buckets"]) == 16 and len(man["dvs"]) > 1
+        pred = "o_orderkey > 0"
+        df = scan(spark, root, predicate=pred)
+        assert df.rdd.getNumPartitions() == 1
+        got = _rows_sorted(df)
+        assert got == _rows_sorted(mf.read_table(spark, root, predicate=pred))
+        assert got and not any(r[0] % 10 == 0 for r in got)
+        (part,) = ManifestBatchReader(
+            {"path": root, "predicate": pred, "sessiontimezone": "UTC"}
+        ).partitions()
+        assert len(part.spec["dirs"]) == 16
+        assert part.spec["dvs"] == mf._dv_dirs(root, man, list(range(16)))
 
 
 class TestSnapshotSemantics:

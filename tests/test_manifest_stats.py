@@ -376,3 +376,39 @@ def test_sink_nan_rows_survive_parquet_pushdown(spark, tmp_path):
         assert [r["k"] for r in got] == [2, 2]
     finally:
         spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "dv"])
+def test_delete_targets_prune_timestamp_range_in_session_tz(spark, tmp_path, mode):
+    """A delete's target set comes from the same pruning as a read,
+    timestamp literals resolved under the session timezone: a range
+    on an hourly ``ts`` column touches the one ``floor(k / 64)``
+    bucket a read of the same predicate scans, not all eight, and the
+    delete removes exactly the predicate's rows."""
+    path = str(tmp_path / "ts_range_tbl")
+    df = spark.range(0, 500).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+    )
+    mf.create_table(df, path, ["k"], partition_expr="floor(k / 64)")
+    pred = "ts >= '1970-01-20 00:00:00'"
+    man = mf.read_manifest(path)
+    assert len(man["buckets"]) == 8
+    read_dirs = mf.resolve_read_dirs(spark, path, pred)
+    targets = mf._delete_targets(spark, path, man, pred)
+    assert len(read_dirs) == 1
+    assert sorted(
+        os.path.join(path, r, f"{mf._BUCKET_COL}={b}")
+        for b, rels in targets.items()
+        for r in rels
+    ) == sorted(read_dirs)
+
+    full = mf.read_table(spark, path)
+    expect = _sorted_rows(full.filter(f"NOT ({pred})"))
+    assert len(expect) == 456
+    mf.delete_from(spark, path, pred, mode=mode)
+    assert _sorted_rows(mf.read_table(spark, path)) == expect
+    after = mf.read_manifest(path)
+    # the buckets the predicate cannot touch keep their directories
+    for b in range(7):
+        assert after["buckets"][str(b)] == man["buckets"][str(b)], b

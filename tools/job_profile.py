@@ -7,7 +7,9 @@ Usage: python tools/job_profile.py [sf_dir] <query> [query ...]
 Reads the AppStatusStore, so numbers are ground truth from the same
 listener the UI uses. Each query runs once, untimed, before it is
 profiled (as tests/test_job_budget.py does), so the one-time parquet
-schema-inference job of a table's first read is not counted.
+schema-inference job of a table's first read is not counted. The
+profiled result is freed (``checkpoints.free``) once consumed, so its
+checkpoints do not stay pinned into the next query's profile.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import _isolate, _materialize
+from mapreduce_cs416_spark.operators.checkpoints import free
 from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
 from mapreduce_cs416_spark.session import get_spark
 
@@ -67,8 +70,11 @@ def main() -> int:
         _isolate(spark)
         before_ids = {j["id"] for j in _jobs(spark)}
         t0 = time.time()
-        _materialize(ALL_QUERIES[name].fn(spark, sf_dir))
+        df = ALL_QUERIES[name].fn(spark, sf_dir)
+        _materialize(df)
         wall = time.time() - t0
+        # release the checkpoints the consumed result still reads
+        free(df)
         jobs = [j for j in _jobs(spark) if j["id"] not in before_ids]
         print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
         prev_end = None
