@@ -25,4 +25,10 @@ Layout
                    operators.
 """
 
+from . import _zipdir
+
+# every Python worker that runs this package's code imports it here, so
+# a reused worker stops re-parsing pyspark.zip on each invocation
+_zipdir.install()
+
 __version__ = "0.1.0"

@@ -192,7 +192,10 @@ def bpe_word_table(docs: DataFrame) -> DataFrame:
 def _local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Driver-side rows as a LocalTableScan: createDataFrame over an
     Arrow table is planned in the JVM, while a list of tuples becomes
-    a parallelized RDD whose every read runs through Python workers."""
+    a parallelized RDD whose every read runs through Python workers.
+    Measured warm on 4 vCPU (500 rows): 0.01 s a read here, against
+    0.09 s for the tuple list in workers that have run this package's
+    code and 0.26–0.30 s in workers that have not (see ``_zipdir``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType

@@ -20,6 +20,14 @@ environment:
   (perfbench, sf0.01): peak RSS median 1342 -> 1134 MB with the
   interquartile range 110 -> 48 MB on ingest_sf0.01, and 1744 -> 1297
   MB with 121 -> 48 MB on iterative_sf0.01.
+- ``spark.executorEnv.PYTHONPATH`` names the directory this package
+  sits in, so Python workers import it wherever the driver runs.
+  Every Python worker invocation (a task or UDF, a data-source
+  planner, a streaming-sink write or commit) pays a fixed set-up cost
+  before any user code. Measured warm on 4 vCPU as whole one-task
+  jobs: 0.08–0.10 s in a reused worker that has run this package's
+  code, which keeps pyspark.zip's parsed directory (``_zipdir``), and
+  0.18–0.30 s in one that has not.
 """
 
 from __future__ import annotations
@@ -27,6 +35,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -57,6 +67,9 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import this package from where the driver found it,
+        # also through sys.path with another working directory
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # managed tables (bucketed joins) live outside the repo tree
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         .config(

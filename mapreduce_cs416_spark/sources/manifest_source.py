@@ -68,8 +68,10 @@ packed, whole, into ``min(#buckets, ceil(total / split))`` partitions
 with ``split = min(128 MiB, max(4 MiB, total / P))`` — Spark's
 ``maxPartitionBytes`` and ``openCostInBytes`` defaults — largest
 bucket first into the lightest partition (:func:`_pack`). Every
-partition is a Python task, a round trip the scan pays whatever the
-bucket holds, so a small table reads in one task and a large one
+partition is a Python task, with a fixed cost whatever it holds (a
+warm one-task scan of a 200-row table: 0.10 s on 4 vCPU, 0.24–0.26 s
+before ``_zipdir`` kept pyspark.zip's directory across worker
+invocations), so a small table reads in one task and a large one
 spreads over P. ``P`` is :func:`session.default_parallelism`, the
 core count the session factory gives ``local[n]``: ``partitions()``
 runs in a Python worker with no SparkSession, so it cannot ask Spark.

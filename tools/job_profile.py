@@ -1,6 +1,9 @@
 """Per-query job breakdown: run a query through the noop sink and list
-every Spark job it spawned (duration, task count, description) plus the
-inter-job gaps (driver-side planning / py4j time).
+every Spark job it spawned (duration, task count, description, and the
+executor run and CPU time summed over the job's stages) plus the
+inter-job gaps (driver-side planning / py4j time). A run time far above
+the CPU time is time tasks spent waiting rather than computing, such as
+Python worker set-up (see ``mapreduce_cs416_spark._zipdir``).
 
 Usage: python tools/job_profile.py [sf_dir] <query> [query ...]
 
@@ -26,7 +29,8 @@ from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
 from mapreduce_cs416_spark.session import get_spark
 
 
-def _jobs(spark):
+def _jobs(spark, since: int):
+    """Jobs with an id of at least ``since``, oldest first."""
     jvm_sc = spark.sparkContext._jsc.sc()
     # the status store learns of a finished job from the listener bus:
     # drain it, or the sink's job still reads as running
@@ -37,17 +41,23 @@ def _jobs(spark):
     out = []
     while it.hasNext():
         j = it.next()
+        if j.jobId() < since:
+            continue
         sub = j.submissionTime()
         comp = j.completionTime()
         sub_ms = sub.get().getTime() if sub.isDefined() else None
         comp_ms = comp.get().getTime() if comp.isDefined() else None
+        # a skipped stage has zero metrics, so summing every stage is exact
+        stages = [store.lastStageAttempt(int(s)) for s in j.stageIds().mkString(",").split(",") if s]
         out.append(
             {
                 "id": j.jobId(),
                 "sub": sub_ms,
                 "comp": comp_ms,
                 "tasks": j.numTasks(),
-                "stages": j.stageIds().size(),
+                "stages": len(stages),
+                "run": sum(s.executorRunTime() for s in stages) / 1e3,
+                "cpu": sum(s.executorCpuTime() for s in stages) / 1e9,
                 "desc": (j.description().get() if j.description().isDefined() else j.name())[:90],
             }
         )
@@ -68,31 +78,35 @@ def main() -> int:
     for name in names:
         _materialize(ALL_QUERIES[name].fn(spark, sf_dir))
         _isolate(spark)
-        before_ids = {j["id"] for j in _jobs(spark)}
+        first_id = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
         t0 = time.time()
         df = ALL_QUERIES[name].fn(spark, sf_dir)
         _materialize(df)
         wall = time.time() - t0
         # release the checkpoints the consumed result still reads
         free(df)
-        jobs = [j for j in _jobs(spark) if j["id"] not in before_ids]
+        jobs = _jobs(spark, since=first_id)
         print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
         prev_end = None
         t_base = jobs[0]["sub"] if jobs else 0
-        job_sum = 0.0
-        gap_sum = 0.0
+        job_sum = gap_sum = run_sum = cpu_sum = 0.0
         for j in jobs:
             dur = (j["comp"] - j["sub"]) / 1000.0 if j["comp"] else float("nan")
             gap = (j["sub"] - prev_end) / 1000.0 if prev_end is not None else 0.0
             job_sum += dur
             gap_sum += max(gap, 0.0)
+            run_sum += j["run"]
+            cpu_sum += j["cpu"]
             print(
                 f"  job {j['id']:4d} @{(j['sub'] - t_base) / 1000.0:7.3f}s"
-                f" dur {dur:6.3f}s gap {gap:6.3f}s"
+                f" dur {dur:6.3f}s gap {gap:6.3f}s run {j['run']:6.3f}s cpu {j['cpu']:6.3f}s"
                 f" tasks {j['tasks']:4d} stages {j['stages']}  {j['desc']}"
             )
             prev_end = max(prev_end or 0, j["comp"] or 0)
-        print(f"  --- job time {job_sum:.3f}s, inter-job gaps {gap_sum:.3f}s, wall {wall:.3f}s")
+        print(
+            f"  --- job time {job_sum:.3f}s, inter-job gaps {gap_sum:.3f}s, wall {wall:.3f}s,"
+            f" executor run {run_sum:.3f}s, executor CPU {cpu_sum:.3f}s"
+        )
     return 0
 
 
