@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import words_col
+from ..sources.tables import local_frame
 
 
 def pack_sequences(docs: DataFrame, seq_len: int = 512, n_parts: int | None = None) -> DataFrame:
@@ -53,7 +54,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = 512, n_parts: int | None = No
     for pid, tot in totals:
         prefixes.append((pid, acc))
         acc += tot or 0
-    pre = F.broadcast(spark.createDataFrame(prefixes or [(0, 0)], "pid int, prefix long"))
+    pre = F.broadcast(local_frame(spark, prefixes or [(0, 0)], "pid int, prefix long"))
     w = (
         Window.partitionBy("pid")
         .orderBy("doc_id")

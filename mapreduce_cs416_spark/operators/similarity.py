@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, l2_norm
@@ -631,32 +631,43 @@ def _bucketed(p: DataFrame, n_planes: int, n_tables: int, dim: int) -> DataFrame
     )
 
 
+def _kept_pair() -> Column:
+    """The non-key half of ``_bucket_join``'s condition: a.vec_id <
+    b.vec_id, and (tbl, bucket) is the pair's FIRST shared table — no
+    earlier table of a.bk agrees with b.bk (``a.tbl = 0`` guards the
+    first table, since sequence(0, -1) is [0, -1], not empty)."""
+    return (F.col("a.vec_id") < F.col("b.vec_id")) & F.expr(
+        "a.tbl = 0 OR NOT exists(sequence(0, a.tbl - 1), i -> a.bk[i] = b.bk[i])"
+    )
+
+
 def _bucket_join(pb: DataFrame, *carry: str) -> DataFrame:
     """Self-join of a ``_bucketed`` frame on (tbl, bucket) with
-    a.vec_id < b.vec_id: one row per shared table, sides aliased ``a``
-    and ``b``, each carrying vec_id and the ``carry`` columns. An
-    equi-join on the bucket keys, never all-pairs."""
-    k = pb.select("vec_id", *carry, F.posexplode("bk").alias("tbl", "bucket"))
+    a.vec_id < b.vec_id: ONE row per candidate pair, from the lowest
+    table whose bucket both sides share, sides aliased ``a`` and
+    ``b``, each carrying vec_id, bk and the ``carry`` columns. An
+    equi-join on the bucket keys, never all-pairs; a pair colliding
+    in k tables is joined k times but kept once, so no ``distinct``
+    (an exchange and a job) is needed downstream."""
+    k = pb.select("vec_id", "bk", *carry, F.posexplode("bk").alias("tbl", "bucket"))
     a = k.alias("a")
     b = k.alias("b")
     return a.join(
         b,
         (F.col("a.tbl") == F.col("b.tbl"))
         & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
+        & _kept_pair(),
     )
 
 
 def _banded_candidates(pb: DataFrame) -> DataFrame:
-    """Distinct candidate pairs (vec_a < vec_b) of a ``_bucketed``
+    """Candidate pairs (vec_a < vec_b, each once) of a ``_bucketed``
     frame: pairs sharing a bucket in ANY of its tables — the
     candidate set ``lsh_candidate_stats``, ``lsh_eval`` and
     ``margin_mine_pairs_lsh`` measure or score. Reads ``bk`` from the
     caller's one checkpoint; makes none of its own."""
-    return (
-        _bucket_join(pb)
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
+    return _bucket_join(pb).select(
+        F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
     )
 
 
@@ -836,12 +847,11 @@ def cosine_near_dup_lsh(
     predicate in the reducer that already holds both records). The
     ``_bucketed`` frame (vec_id, v, nrm, bk) is checkpointed once;
     its ``bk`` array is posexploded to (tbl, bucket) and self-joined
-    with BOTH sides carrying v and nrm, the exact cosine is computed
-    and thresholded right there, and ``distinct`` collapses a pair
-    found in several tables. The cosine is a deterministic function
-    of the pair (the same sequential fold every time), so each copy
-    carries the bit-identical score and the result equals
-    distinct-candidates-then-verify. The shuffle carries
+    with BOTH sides carrying v and nrm, a pair found in several tables
+    is kept only in the first (``_bucket_join``), and the exact cosine
+    is computed and thresholded right there — each candidate is
+    scored once, and the result equals distinct-candidates-then-verify
+    with no ``distinct``. The shuffle carries
     O(n_tables · N · dim) vector values instead of O(candidates)
     vector-carrying pairs through two verify joins — and candidates
     are ~41% of all pairs at the registered 4×8 point.
@@ -859,16 +869,19 @@ def cosine_near_dup_lsh(
     p = _spread(_prepared(emb)).where(F.col("nrm") > 0)
     pb = _bucketed(p, n_planes, n_tables, dim)
     dot = F.expr("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
+    # the threshold filter is pushed into the join condition AHEAD of
+    # _bucket_join's own predicates, so without this guard every joined
+    # row (both orders, self-pairs, every shared table) is scored
+    cos = F.when(_kept_pair(), dot / (F.col("a.nrm") * F.col("b.nrm")))
     return (
         _bucket_join(pb, "v", "nrm")
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            (dot / (F.col("a.nrm") * F.col("b.nrm"))).alias("cos"),
+            cos.alias("cos"),
         )
         .where(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("score"))
-        .distinct()
     )
 
 

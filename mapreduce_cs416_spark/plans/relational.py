@@ -1554,11 +1554,13 @@ def cdc_merge_orders_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The manifest table format's CHANGE DATA FEED as a query
     (sources/manifest.read_changes): seed the orders snapshot as a
-    manifest table (v1), merge the shared deterministic CDC changelog
-    (v2), and emit the row-level diff between the two committed
-    versions — op 'U' rows are v2's new images (inserts and updated
-    rows), op 'D' rows are v1 images whose keys disappeared. The
-    oracle recomputes the same diff set-theoretically in DuckDB
+    manifest table (v1), merge the shared deterministic CDC changelog,
+    and emit the row-level diff between v1 and the version the merge
+    committed — op 'U' rows are the merged version's new images
+    (inserts and updated rows), op 'D' rows are v1 images whose keys
+    disappeared (an empty changelog commits no version, so the feed
+    from v1 to v1 is empty). The oracle recomputes the same diff
+    set-theoretically in DuckDB
     (merged EXCEPT ALL base + an anti-join for deletes), so the hash
     row proves the bucket-bounded physical diff (only buckets whose
     directory lists differ between the manifests are read) equals the
@@ -1569,8 +1571,8 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, changes = _cdc_orders_feed(load_table(spark, sf_dir, "orders"))
     path = _query_scratch("cdc_change_feed")
     mf.create_table(base, path, ["o_orderkey"])
-    mf.merge_into(spark, path, changes, op_col="op", seq_col="seq")
-    return mf.read_changes(spark, path, 1, 2)
+    merged = mf.merge_into(spark, path, changes, op_col="op", seq_col="seq")
+    return mf.read_changes(spark, path, 1, merged["version"])
 
 
 CDC_CHANGE_FEED_SQL = """

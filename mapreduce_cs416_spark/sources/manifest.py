@@ -1452,7 +1452,10 @@ def _merge_stage(
     to publish — ``_merge_once`` publishes it to this table's own log;
     ``table_group.group_transact`` embeds it (with siblings) in ONE
     group commit so several tables' merges land atomically (VERDICT
-    r12 item 7). Returns (None, None) for an empty batch."""
+    r12 item 7). Returns (None, None) for an empty batch that changes
+    nothing, and a metadata-only manifest (no data staged, rel None)
+    for an empty batch that evolves the schema: an added column must
+    survive the batch, while an unchanged table burns no version."""
     from ..operators import cdc
 
     key_cols = manifest["key_cols"]
@@ -1462,6 +1465,7 @@ def _merge_stage(
     # (add-column / safe widening) under the SAME put-if-absent commit
     # as the data; unsafe changes raise before anything is written.
     manifest = dict(manifest)
+    base_schema_json = manifest.get("schema")
     old_schema = _schema_of(manifest)
     bookkeeping = [op_col] + ([seq_col] if seq_col else [])
     if old_schema is not None:
@@ -1485,7 +1489,9 @@ def _merge_stage(
             "partition expression evaluated to NULL (null key column?)"
         )
     if not touched and not aux:
-        return None, None  # empty batch: nothing staged
+        if manifest.get("schema") == base_schema_json:
+            return None, None  # empty batch: nothing staged
+        return {**manifest, "version": new_version, "op": "merge"}, None
 
     buckets = dict(manifest["buckets"])
     stats = dict(manifest.get("stats", {}))

@@ -21,7 +21,7 @@ from mapreduce_cs416_spark.testing import count_jobs
 BUDGETS = {
     "graph_triangles_lsh": 11,
     "graph_triangles": 11,
-    "graph_kcore_lsh": 35,
+    "graph_kcore_lsh": 34,
     "graph_kcore": 54,
     "graph_pagerank_fixed": 54,
     # adaptive execution submits up to two more query-stage jobs in
@@ -29,8 +29,8 @@ BUDGETS = {
     # 4 cores), so their budgets are the highest count seen
     "dedup_components": 28,
     "entity_resolution": 27,
-    "similarity_cosine_near_dup_lsh": 5,
-    "similarity_near_dup_lsh_prod": 5,
+    "similarity_cosine_near_dup_lsh": 4,
+    "similarity_near_dup_lsh_prod": 4,
     "corpus_bpe_train": 3,
     "mr_wordcount_compat": 1,
     "ivm_orders_revenue": 6,

@@ -903,6 +903,51 @@ def test_schema_evolution_add_column_and_widen_on_merge(spark, float_seeded):
     assert dict(v1.dtypes)["o_totalprice"] == "float"
 
 
+def test_empty_merge_commits_only_a_schema_change(spark, float_seeded):
+    """An empty changelog that adds o_margin and widens o_totalprice
+    commits the evolved schema as a metadata-only version (no data
+    directory staged); the same empty changelog again changes nothing
+    and burns no version."""
+    path, orders, _ = float_seeded
+    empty = _evolving_changelog(orders).where(F.lit(False))
+    man2 = mf.merge_into(spark, path, empty)
+    assert man2["version"] == mf.current_version(path) == 2
+    got = mf.read_table(spark, path)
+    assert dict(got.dtypes)["o_margin"] == "double"
+    assert dict(got.dtypes)["o_totalprice"] == "double"
+    assert man2["buckets"] == mf.read_manifest(path, 1)["buckets"]
+    assert got.where(F.col("o_margin").isNotNull()).count() == 0
+    assert mf.merge_into(spark, path, empty)["version"] == 2
+    assert mf.current_version(path) == 2
+
+
+@pytest.fixture(scope="module")
+def empty_sf_dir(sf_dir, tmp_path_factory):
+    """Every table in ``TABLES`` with its schema and no rows."""
+    import pyarrow.parquet as pq
+
+    from mapreduce_cs416_spark.sources.tables import TABLES
+
+    out = tmp_path_factory.mktemp("empty_sf")
+    for name in TABLES:
+        schema = pq.read_schema(os.path.join(sf_dir, f"{name}.parquet"))
+        pq.write_table(schema.empty_table(), str(out / f"{name}.parquet"))
+    return str(out)
+
+
+@pytest.mark.parametrize("name", ["cdc_change_feed", "cdc_merge_schema_evolution"])
+def test_cdc_queries_match_oracle_on_empty_tables(spark, empty_sf_dir, name):
+    """The empty merge these queries run commits no data: the change
+    feed diffs v1 against the version the merge committed (v1 itself),
+    and the schema evolution still adds o_margin."""
+    from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
+    from mapreduce_cs416_spark.testing import compare_query
+
+    spec = ALL_QUERIES[name]
+    ok, msg = compare_query(spark, spec.fn, spec.oracle, empty_sf_dir)
+    assert ok, msg
+
+
 def test_schema_evolution_keeps_pruning_io_pinned(spark, float_seeded):
     """Mixed-version point lookups still read exactly ONE bucket
     directory on both sides of the evolution boundary, and the new

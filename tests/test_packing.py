@@ -101,3 +101,41 @@ try:
 
 except ImportError:  # pragma: no cover — hypothesis is baked in, but gate anyway
     pass
+
+
+def _rdd_names(cluster) -> list[str]:
+    """Names of every RDD in a stage's operation-graph cluster."""
+    out = []
+    it = cluster.childNodes().iterator()
+    while it.hasNext():
+        out.append(it.next().name())
+    it = cluster.childClusters().iterator()
+    while it.hasNext():
+        out.extend(_rdd_names(it.next()))
+    return out
+
+
+def test_pack_sequences_query_runs_no_python_rdd(spark, sf_dir):
+    """The broadcast prefix frame is built on the driver; as a
+    LocalTableScan it is read in the JVM, so no stage of the query
+    runs a Python worker (a tuple-list createDataFrame would be a
+    PythonRDD read in every task)."""
+    from mapreduce_cs416_spark.plans.registry import ALL_QUERIES
+
+    sc = spark.sparkContext._jsc.sc()
+    first = sc.dagScheduler().nextJobId()
+    ALL_QUERIES["corpus_pack_sequences"].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    jobs = store.jobsList(spark.sparkContext._jvm.java.util.ArrayList()).iterator()
+    stages = []
+    while jobs.hasNext():
+        j = jobs.next()
+        if j.jobId() >= first:
+            stages += [int(s) for s in j.stageIds().mkString(",").split(",") if s]
+    assert stages
+    for s in stages:
+        names = _rdd_names(store.operationGraphForStage(s).rootCluster())
+        assert "PythonRDD" not in names, f"stage {s}: {names}"

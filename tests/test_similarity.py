@@ -533,3 +533,23 @@ def test_cosine_near_dup_lsh_pair_in_many_buckets_emitted_once(spark):
     exact = [tuple(r) for r in similarity.cosine_near_dup_pairs(emb, 0.9).collect()]
     assert sorted(lsh) == sorted(exact)
     assert sorted((a, b) for a, b, _ in lsh) == [(0, 1), (0, 2), (1, 2)]
+
+
+def test_cosine_near_dup_lsh_hot_cluster_matches_exact_twin(spark):
+    """A near-duplicate cluster shares a bucket in every table, so each
+    of its pairs is joined once per table; it must still come out once,
+    with the exact twin's score, beside random vectors that share
+    buckets only by chance."""
+    base = _lcg_vec(21)
+    rows = [
+        (i, _unit([x + 1e-3 * y for x, y in zip(base, _lcg_vec(30000 + i))]))
+        for i in range(300)
+    ] + [(300 + i, _unit(_lcg_vec(50000 + i))) for i in range(200)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    lsh = [
+        tuple(r)
+        for r in similarity.cosine_near_dup_lsh(emb, 0.9, n_planes=8, n_tables=4, dim=DIM).collect()
+    ]
+    exact = [tuple(r) for r in similarity.cosine_near_dup_pairs(emb, 0.9).collect()]
+    assert len(lsh) >= 300 * 299 // 2
+    assert sorted(lsh) == sorted(exact)

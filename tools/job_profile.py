@@ -1,9 +1,12 @@
 """Per-query job breakdown: run a query through the noop sink and list
 every Spark job it spawned (duration, task count, description, and the
-executor run and CPU time summed over the job's stages) plus the
+executor run, CPU and JVM GC time summed over the job's stages) plus the
 inter-job gaps (driver-side planning / py4j time). A run time far above
 the CPU time is time tasks spent waiting rather than computing, such as
-Python worker set-up (see ``mapreduce_cs416_spark._zipdir``).
+Python worker set-up (see ``mapreduce_cs416_spark._zipdir``); the GC
+time is the part of the run time the tasks' JVM spent collecting (in
+local mode the one driver JVM, so a collection that stops several
+tasks counts once per task).
 
 Usage: python tools/job_profile.py [sf_dir] <query> [query ...]
 
@@ -58,6 +61,7 @@ def _jobs(spark, since: int):
                 "stages": len(stages),
                 "run": sum(s.executorRunTime() for s in stages) / 1e3,
                 "cpu": sum(s.executorCpuTime() for s in stages) / 1e9,
+                "gc": sum(s.jvmGcTime() for s in stages) / 1e3,
                 "desc": (j.description().get() if j.description().isDefined() else j.name())[:90],
             }
         )
@@ -89,7 +93,7 @@ def main() -> int:
         print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
         prev_end = None
         t_base = jobs[0]["sub"] if jobs else 0
-        job_sum = gap_sum = run_sum = cpu_sum = 0.0
+        job_sum = gap_sum = run_sum = cpu_sum = gc_sum = 0.0
         for j in jobs:
             dur = (j["comp"] - j["sub"]) / 1000.0 if j["comp"] else float("nan")
             gap = (j["sub"] - prev_end) / 1000.0 if prev_end is not None else 0.0
@@ -97,15 +101,16 @@ def main() -> int:
             gap_sum += max(gap, 0.0)
             run_sum += j["run"]
             cpu_sum += j["cpu"]
+            gc_sum += j["gc"]
             print(
                 f"  job {j['id']:4d} @{(j['sub'] - t_base) / 1000.0:7.3f}s"
-                f" dur {dur:6.3f}s gap {gap:6.3f}s run {j['run']:6.3f}s cpu {j['cpu']:6.3f}s"
+                f" dur {dur:6.3f}s gap {gap:6.3f}s run {j['run']:6.3f}s cpu {j['cpu']:6.3f}s gc {j['gc']:6.3f}s"
                 f" tasks {j['tasks']:4d} stages {j['stages']}  {j['desc']}"
             )
             prev_end = max(prev_end or 0, j["comp"] or 0)
         print(
             f"  --- job time {job_sum:.3f}s, inter-job gaps {gap_sum:.3f}s, wall {wall:.3f}s,"
-            f" executor run {run_sum:.3f}s, executor CPU {cpu_sum:.3f}s"
+            f" executor run {run_sum:.3f}s, executor CPU {cpu_sum:.3f}s, executor GC {gc_sum:.3f}s"
         )
     return 0
 
